@@ -17,6 +17,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import pd_utils_spark as pus
 from pd_utils_spark.extensions import dedup as pus_dedup
@@ -31,6 +32,7 @@ from pd_utils_spark.extensions import profile as pus_profile
 from pd_utils_spark.extensions import sampling as pus_sample
 from pd_utils_spark.extensions import selection as pus_select
 from pd_utils_spark.extensions import stats as pus_stats
+from pd_utils_spark.utils import quote, release_registered
 
 _ROUND = 6
 
@@ -46,12 +48,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # on either: the data's nanos are micro-aligned, so the two
         # paths produce identical instants (session tz is UTC).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev = pus.read_parquet(spark, f"{sf_dir}/events.parquet")
         ts_type = dict(ev.dtypes)["ts"]
         if ts_type == "bigint":
             return ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = pus.read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "documents":
         # the test-data corpus is ONE parquet row group, so Spark gets a
         # single input split and every CPU-heavy text pipeline (shingles,
@@ -63,11 +65,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _round_doubles(df: DataFrame, n: int = _ROUND) -> DataFrame:
-    out = df
-    for name, dtype in df.dtypes:
-        if dtype in ("double", "float"):
-            out = out.withColumn(name, F.round(F.col(name).cast("double"), n))
-    return out
+    return df.select(
+        *(
+            F.round(F.col(quote(name)).cast("double"), n).alias(name)
+            if dtype in ("double", "float")
+            else F.col(quote(name))
+            for name, dtype in df.dtypes
+        )
+    )
 
 
 def _stream_state_partitions(spark: SparkSession, n: int = 8):
@@ -93,6 +98,39 @@ def _stream_state_partitions(spark: SparkSession, n: int = 8):
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     return _cm()
+
+
+def _two_batch_stream(src: str, first: DataFrame, second: DataFrame) -> DataFrame:
+    """Append ``first`` then ``second`` to ``src`` as one parquet file
+    each and stream ``src`` one file per trigger: two ordered
+    AvailableNow micro-batches (the file source takes files in
+    modification order; the writes are sequential actions). The
+    stream is declared with ``first``'s schema, so no job reads the
+    files back to infer it."""
+    for part in (first, second):
+        part.coalesce(1).write.mode("append").parquet(src)
+    return (
+        first.sparkSession.readStream.schema(first.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _detach(out: DataFrame, ddl: str | StructType) -> DataFrame:
+    """``out`` copied to the driver as Arrow and rebuilt as a local
+    frame of type ``ddl``, for results read from files the query
+    deletes before it returns. Consuming the copy runs in the JVM and
+    starts no Python workers."""
+    return out.sparkSession.createDataFrame(out.toArrow(), ddl)
+
+
+def _release_prefix(out: DataFrame) -> DataFrame:
+    """``out`` detached, then the range-partitioned inputs that
+    ``plans.prefix`` persisted for it released: the copy no longer
+    reads them, so none outlives the query."""
+    res = _detach(out, out.schema)
+    release_registered("prefix_agg")
+    return res
 
 
 # ---------------------------------------------------------------- queries
@@ -1204,8 +1242,6 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pd_utils_spark.utils import release_registered
-
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.col("text"), " ")
     m = F.greatest(F.lit(3), F.floor(F.size(toks) * 0.5).cast("int"))
@@ -1246,7 +1282,7 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f.result()
         release_registered("containment_index_frames")
         art = {
-            n: spark.read.parquet(f"{base}/{n}")
+            n: spark.read.schema(frames[n].schema).parquet(f"{base}/{n}")
             for n in ("index", "sets", "dfreq")
         }
         out = pus_dedup.dedup_containment_against_index(
@@ -1257,11 +1293,11 @@ def q_dedup_containment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.9,
             k=1,
         )
-        rows = out.select("doc_id").collect()
+        res = _detach(out.select("doc_id"), "doc_id bigint")
         release_registered("dedup_containment_against_index")
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id bigint")
+    return res
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,12 +1706,12 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("label"),
     )
     out = isotonic_calibration(users, "score", "label", n_bins=10)
-    return out.select(
+    return _release_prefix(out.select(
         "bin", "n", "positives",
         F.round("mean_score", 6).alias("mean_score"),
         F.round("raw_rate", 6).alias("raw_rate"),
         F.round("calibrated", 6).alias("calibrated"),
-    )
+    ))
 
 
 def q_semantic_dedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1920,7 +1956,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-locked in tests/test_streaming.py."""
     from pd_utils_spark.streaming.stateful import streaming_sessionize
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # FileStreamSource wants a directory; glob-filter down to the one
     # events file inside the sf dir
     sdf = (
@@ -1971,7 +2007,7 @@ def q_streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.extensions.dedup import _norm
     from pd_utils_spark.streaming.stateful import streaming_exact_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2009,7 +2045,7 @@ def q_streaming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.extensions.dedup import minhash_band_key
     from pd_utils_spark.streaming.stateful import streaming_band_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2255,9 +2291,9 @@ def q_streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (one coalesced file -> one AvailableNow batch) so the row
         # actually drops half its input
         src = f"{base}/src"
-        _docs_with_copies(spark, sf_dir).coalesce(1).write.parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = spark.readStream.schema(raw_schema).parquet(src)
+        docs = _docs_with_copies(spark, sf_dir)
+        docs.coalesce(1).write.parquet(src)
+        sdf = spark.readStream.schema(docs.schema).parquet(src)
         with _stream_state_partitions(spark):
             q = streaming_bloom_dedup(
                 sdf,
@@ -2278,10 +2314,9 @@ def q_streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"micro-batch; the stream ran {data_batches}"
                 )
         out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
+        return _detach(out, "doc_id bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id bigint")
 
 
 def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2309,7 +2344,7 @@ def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pd_utils_spark.streaming.stateful import streaming_greedy_band_dedup
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2341,11 +2376,10 @@ def q_streaming_multiband_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "first-claim-wins rule (see operator docstring)"
                 )
         out = spark.read.parquet(f"{base}/out").select("doc_id")
-        # the sink dirs are deleted before return: collect now
-        rows = out.collect()
+        # the sink dirs are deleted before return: detach now
+        return _detach(out, "doc_id bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id bigint")
 
 
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2363,7 +2397,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev_batch.select("user_id").distinct()
         .withColumn("segment", (F.col("user_id") % 5).cast("int"))
     )
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/events.parquet").schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -2412,7 +2446,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     locked in tests/test_streaming.py."""
     from pd_utils_spark.streaming.windows import stream_interval_join
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/events.parquet").schema
 
     def _stream():
         return (
@@ -2465,7 +2499,7 @@ def q_streaming_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pd_utils_spark.streaming.stateful import stateful_running_agg
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = pus.read_parquet(spark, f"{sf_dir}/events.parquet").schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -2547,12 +2581,12 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix scan, fit from one sufficient-statistics aggregate."""
     d = _t(spark, sf_dir, "documents").select("text")
     out = pus_text.zipf_fit(d)
-    return out.select(
+    return _release_prefix(out.select(
         "n_tokens", "n_types",
         F.round("slope", 6).alias("slope"),
         F.round("intercept", 6).alias("intercept"),
         F.round("r2", 6).alias("r2"),
-    )
+    ))
 
 
 def q_binary_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5223,11 +5257,11 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymptotic p via a 100-term JVM-side series. d_stat is exact."""
     ev = _t(spark, sf_dir, "events")
     out = pus_stats.ks_2samp(ev, "value", "event_type", "view", "purchase")
-    return out.select(
+    return _release_prefix(out.select(
         "n_a", "n_b",
         F.round("d_stat", 6).alias("d_stat"),
         F.round("p_value", 6).alias("p_value"),
-    )
+    ))
 
 
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5239,11 +5273,11 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned unrounded."""
     ev = _t(spark, sf_dir, "events")
     out = pus_stats.mann_whitney_u(ev, "value", "event_type", "view", "purchase")
-    return out.select(
+    return _release_prefix(out.select(
         "n_a", "n_b", "u_stat",
         F.round("z", 6).alias("z"),
         F.round("p_value", 6).alias("p_value"),
-    )
+    ))
 
 
 def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5322,14 +5356,14 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ev"),
     ).withColumn("cohort", (F.col("user_id") % 2).cast("int"))
     out = pus_stats.kaplan_meier(users, "dur", "ev", byvars="cohort")
-    return out.select(
+    return _release_prefix(out.select(
         "cohort",
         "t",
         "n_risk",
         "n_event",
         "n_censored",
         F.round("survival", 9).alias("survival"),
-    )
+    ))
 
 
 def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5375,12 +5409,12 @@ def q_conformal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # covered COUNT, not the rounded coverage ratio: count/n_test can
     # land on an exact decimal midpoint where engine rounding modes
     # diverge; the count itself is integer-exact on both engines
-    return out.select(
+    return _release_prefix(out.select(
         "n_calib",
         "n_test",
         F.round("q_hat", 6).alias("q_hat"),
         F.round(F.col("coverage") * F.col("n_test"), 0).cast("long").alias("covered"),
-    )
+    ))
 
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5436,7 +5470,7 @@ def q_quantile_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     out = quantile_transform(o, "o_totalprice", byvars="o_orderpriority")
-    return (
+    return _release_prefix(
         out.orderBy("o_orderkey")
         .limit(200)
         .select(
@@ -5690,10 +5724,10 @@ def q_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("y"),
     ).withColumn("treat", (F.col("user_id") % 2).cast("int"))
     out = uplift_curve(users, "score", "treat", "y", n_bins=10)
-    return out.select(
+    return _release_prefix(out.select(
         "bin", "n_t", "n_c", "r_t", "r_c",
         F.round("uplift", 6).alias("uplift"),
-    )
+    ))
 
 
 def q_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5713,14 +5747,14 @@ def q_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("label"),
     )
     out = lift_table(users, "score", "label", n_bins=10)
-    return out.select(
+    return _release_prefix(out.select(
         "bin", "n", "positives",
         F.round("rate", 6).alias("rate"),
         F.round("lift", 6).alias("lift"),
         "cum_n", "cum_positives",
         F.round("capture_rate", 6).alias("capture_rate"),
         F.round("cum_lift", 6).alias("cum_lift"),
-    )
+    ))
 
 
 def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5850,7 +5884,7 @@ def q_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pd_utils_spark.extensions.sampling import negative_pairs
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    return negative_pairs(d, "doc_id", k=3)
+    return _release_prefix(negative_pairs(d, "doc_id", k=3))
 
 
 def q_proportion_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5991,14 +6025,14 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.filter(F.dayofmonth("ts") <= 15).select("value")
     cur = ev.filter(F.dayofmonth("ts") > 15).select("value")
     out = pus_stats.population_stability_index(base, cur, "value", bins=10)
-    return out.select(
+    return _release_prefix(out.select(
         "bin",
         F.round("hi", 2).alias("hi"),
         "n_base", "n_cur",
         F.round("p", 6).alias("p"),
         F.round("q", 6).alias("q"),
         F.round("contrib", 6).alias("contrib"),
-    )
+    ))
 
 
 def q_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6045,11 +6079,11 @@ def q_walk_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarized per (split, fold, role)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "ts")
     out = pus_sample.walk_forward_splits(ev, "ts", n_splits=4)
-    return out.groupBy("split", "fold", "role").agg(
+    return _release_prefix(out.groupBy("split", "fold", "role").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("event_id").alias("min_event"),
         F.max("event_id").alias("max_event"),
-    )
+    ))
 
 
 def q_gini_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6061,7 +6095,9 @@ def q_gini_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     out = pus_sample.gini_concentration(per_user, "n_events")
-    return out.select("n", "total", F.round("gini", 6).alias("gini"))
+    return _release_prefix(
+        out.select("n", "total", F.round("gini", 6).alias("gini"))
+    )
 
 
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6071,11 +6107,11 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     under re-partitioning); summarized per segment."""
     ev = _t(spark, sf_dir, "events")
     out = pus_sample.rfm_segments(ev, "user_id", "ts", "value", n_bins=4)
-    return out.groupBy("segment").agg(
+    return _release_prefix(out.groupBy("segment").agg(
         F.count(F.lit(1)).alias("users"),
         F.round(F.avg("monetary"), 6).alias("avg_monetary"),
         F.round(F.avg("frequency"), 6).alias("avg_frequency"),
-    )
+    ))
 
 
 def q_purged_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6089,11 +6125,11 @@ def q_purged_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pus_sample.purged_kfold_split(
         ev, "ts", n_folds=4, embargo_seconds=7200, horizon_seconds=3600
     )
-    return out.groupBy("test_fold", "fold", "role").agg(
+    return _release_prefix(out.groupBy("test_fold", "fold", "role").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("event_id").alias("min_event"),
         F.max("event_id").alias("max_event"),
-    )
+    ))
 
 
 def q_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6164,11 +6200,11 @@ def q_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = fdr_bh(scored, partitions=8)
-    return out.select(
+    return _release_prefix(out.select(
         "segment", "clicks", "n",
         F.round("p_value", 6).alias("p_value"),
         F.round("q_value", 6).alias("q_value"),
-    )
+    ))
 
 
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6939,19 +6975,11 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="pus_hllstream_")
     try:
         ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
-        src = f"{base}/src"
         # two appends -> two files -> two AvailableNow micro-batches
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sdf = _two_batch_stream(
+            f"{base}/src",
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.col("event_id") % 2 == 1),
         )
         with _stream_state_partitions(spark):
             q = streaming_distinct_hll(
@@ -6976,12 +7004,11 @@ def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.read.parquet(f"{base}/out").select(
             "event_type", "distinct_estimate", "as_of_batch"
         )
-        rows = out.collect()
+        return _detach(
+            out, "event_type string, distinct_estimate bigint, as_of_batch bigint"
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, distinct_estimate bigint, as_of_batch bigint"
-    )
 
 
 def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6991,8 +7018,8 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches; per batch, the per-event_type frequent-items
     sketch combines into the accumulated sketch (reading only
     versions STRICTLY older than the batch id — frequent-items
-    combine is NOT idempotent, the one replay property that differs
-    from the HLL/bottom-k rows) and a top-k snapshot overwrites.
+    combine is NOT idempotent, so a replay must not re-merge its own
+    version) and a top-k snapshot overwrites.
     Read in the sketch's EXACT regime (16 distinct items per group,
     max_items 64, k=all), so cross-batch counts are exact group
     counts — the oracle states them directly and the hash match
@@ -7007,18 +7034,10 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "event_type", (F.col("user_id") % 16).alias("item")
         )
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sdf = _two_batch_stream(
+            f"{base}/src",
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.col("event_id") % 2 == 1),
         )
         with _stream_state_partitions(spark):
             q = streaming_topk(
@@ -7047,12 +7066,11 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("count").cast("bigint").alias("n"),
             "as_of_batch",
         )
-        rows = out.collect()
+        return _detach(
+            out, "event_type string, item bigint, n bigint, as_of_batch bigint"
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, item bigint, n bigint, as_of_batch bigint"
-    )
 
 
 def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7077,18 +7095,10 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="pus_qstream_")
     try:
         ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sdf = _two_batch_stream(
+            f"{base}/src",
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.col("event_id") % 2 == 1),
         )
         with _stream_state_partitions(spark):
             q = streaming_sample_quantiles(
@@ -7115,14 +7125,13 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.read.parquet(f"{base}/out").select(
             "event_type", "q25", "q50", "q75", "n_sampled", "as_of_batch"
         )
-        rows = out.collect()
+        return _detach(
+            out,
+            "event_type string, q25 double, q50 double, q75 double, "
+            "n_sampled bigint, as_of_batch bigint",
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "event_type string, q25 double, q50 double, q75 double, "
-        "n_sampled bigint, as_of_batch bigint",
-    )
 
 
 def q_streaming_containment_dedup(
@@ -7160,20 +7169,8 @@ def q_streaming_containment_dedup(
                 F.col("text"), F.lit(" zq1 zq2 zq3 zq4 zq5 zq6 zq7")
             ).alias("text"),
         )
-        src = f"{base}/src"
-        # ordered appends -> ordered AvailableNow micro-batches (file
-        # source takes files in modification order; the writes are
-        # sequential actions)
-        d.coalesce(1).write.mode("append").parquet(src)
-        trunc.unionByName(salted).coalesce(1).write.mode("append").parquet(
-            src
-        )
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        # ordered appends -> ordered AvailableNow micro-batches
+        sdf = _two_batch_stream(f"{base}/src", d, trunc.unionByName(salted))
         with _stream_state_partitions(spark):
             q = streaming_containment_dedup(
                 sdf,
@@ -7194,10 +7191,9 @@ def q_streaming_containment_dedup(
                     f"micro-batches; ran {data_batches}"
                 )
         out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
+        return _detach(out, "doc_id bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id bigint")
 
 
 def q_streaming_minhash_dedup(
@@ -7234,17 +7230,7 @@ def q_streaming_minhash_dedup(
                 "text"
             ),
         )
-        src = f"{base}/src"
-        d.coalesce(1).write.mode("append").parquet(src)
-        near.unionByName(novel).coalesce(1).write.mode("append").parquet(
-            src
-        )
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        sdf = _two_batch_stream(f"{base}/src", d, near.unionByName(novel))
         with _stream_state_partitions(spark):
             q = streaming_minhash_dedup(
                 sdf,
@@ -7267,10 +7253,9 @@ def q_streaming_minhash_dedup(
                     f"micro-batches; ran {data_batches}"
                 )
         out = spark.read.parquet(f"{base}/out").select("doc_id")
-        rows = out.collect()
+        return _detach(out, "doc_id bigint")
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id bigint")
 
 
 def q_streaming_weighted_sample(
@@ -7301,18 +7286,10 @@ def q_streaming_weighted_sample(
             "value",
             ((F.col("user_id") % 5) + 1.0).alias("weight"),
         )
-        src = f"{base}/src"
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        raw_schema = spark.read.parquet(src).schema
-        sdf = (
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sdf = _two_batch_stream(
+            f"{base}/src",
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.col("event_id") % 2 == 1),
         )
         with _stream_state_partitions(spark):
             q = streaming_weighted_sample(
@@ -7339,14 +7316,13 @@ def q_streaming_weighted_sample(
         out = spark.read.parquet(f"{base}/out").select(
             "event_type", "n_sampled", "sum_sampled", "as_of_batch"
         )
-        rows = out.collect()
+        return _detach(
+            out,
+            "event_type string, n_sampled bigint, sum_sampled double, "
+            "as_of_batch bigint",
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "event_type string, n_sampled bigint, sum_sampled double, "
-        "as_of_batch bigint",
-    )
 
 
 def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -68,6 +68,7 @@ from pd_utils_spark.sources.load import (
     load_sas,
     optimized_df,
     read_file,
+    read_parquet,
     to_copy_paste,
 )
 from pd_utils_spark.sources.sink import compact_small_files, write_partitioned

@@ -130,6 +130,10 @@ def quantile_transform(
     (:func:`pd_utils_spark.plans.prefix.prefix_sum`) and joins back on
     the value — never a single-task total-order window. Null values
     pass through with null ``out``.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.utils import to_list
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pd_utils_spark.utils import register_persisted
@@ -559,6 +559,24 @@ def _peel_round(e: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df.localCheckpoint(eager=True)`` and its row count, the count
+    read from an ``Observation`` on the checkpoint's own job instead of
+    a separate ``count()`` job."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return out, obs.get["n"]
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a local checkpoint. ``df.unpersist()``
+    drops only cache-manager entries, so a superseded round would stay
+    in the block manager for the rest of the session."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def k_core(
     edges: DataFrame,
     k: int,
@@ -580,25 +598,25 @@ def k_core(
     surviving endpoints — all edge-sized shuffles, payload never
     moves. The edge list is checkpointed per round (flat plan, same
     lineage hygiene as :func:`pagerank`); convergence is detected by
-    comparing edge counts — one cheap action per round against
-    just-materialized data. Rounds are bounded by the graph's
+    comparing edge counts, observed on each round's checkpoint job
+    (no separate count job). A round's checkpoint is released as soon
+    as the next one is materialized, so only the round behind the
+    returned frame stays persisted. Rounds are bounded by the graph's
     degeneracy ordering depth, small in practice (web graphs: tens).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     a, b = F.col(src), F.col(dst)
-    e = (
+    e, n_edges = _counted_checkpoint(
         edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_edges = e.count()
     for _ in range(max_iter):
         if n_edges == 0:
             break
-        e2 = _peel_round(e, k).localCheckpoint(eager=True)
-        n2 = e2.count()
+        e2, n2 = _counted_checkpoint(_peel_round(e, k))
+        _release_checkpoint(e)
         e = e2
         if n2 == n_edges:
             break

@@ -327,6 +327,10 @@ def uplift_curve(
     single-task window), the per-bin aggregate is one hash agg on
     ``n_bins`` groups, and the cumulative sums are a window over the
     ``n_bins``-row frame — O(rows) work, O(distinct scores) shuffle.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.plans.prefix import exact_ntile
     from pyspark.sql import Window
@@ -390,6 +394,10 @@ def lift_table(
     distributed prefix scan (no single-task window), one hash agg to
     ``n_bins`` rows, cumulative sums on the tiny bin frame, and the
     base rate joined in as a broadcast one-row aggregate.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.plans.prefix import exact_ntile
 
@@ -463,6 +471,10 @@ def isotonic_calibration(
     loop, and every step replays in any SQL engine). Binned-PAV is
     also the statistically honest form at corpus scale: per-row PAV
     on 10^9 rows overfits the tails the bins smooth out.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.plans.prefix import exact_ntile
 

@@ -863,6 +863,10 @@ def purged_kfold_split(
     timestamps land in the same fold by construction). Fold spans are
     an n_folds-row broadcast; roles are pure column arithmetic against
     it. No total-order window, no driver action.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     if n_folds < 2:
         raise ValueError(f"n_folds must be >= 2: {n_folds}")
@@ -937,6 +941,10 @@ def walk_forward_splits(
     assignment is the exact equal-count time rank via the distributed
     prefix scan (tied timestamps share a block); the split dimension
     is an ``n_splits``-row broadcast.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     if n_splits < 1:
         raise ValueError(f"n_splits must be >= 1: {n_splits}")
@@ -981,7 +989,12 @@ def gini_concentration(
     The standard corpus-audit companion to dedup/mixing: a source mix
     whose token mass has G ~ 0.95 is one domain wearing ten names.
     Scale shape: per-value count agg + one distributed prefix scan +
-    a one-row aggregate; shuffle is O(distinct values)."""
+    a one-row aggregate; shuffle is O(distinct values).
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
+    """
     from pd_utils_spark.plans.prefix import prefix_sum
 
     v = F.col(valuecol).cast("double")
@@ -1040,6 +1053,10 @@ def rfm_segments(
     timestamp rides the plan as a one-row broadcast (no driver
     action). Three prefix scans over per-distinct-metric counts —
     shuffle O(distinct metric values), never a total-order window.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     if n_bins < 2:
         raise ValueError(f"n_bins must be >= 2: {n_bins}")
@@ -1140,6 +1157,10 @@ def negative_pairs(
     anchor explodes to ``k`` hashed slot numbers, and one equi-join
     on the slot maps them to partner ids. Two O(rows * k) shuffles,
     nothing collected, no RNG state.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.plans.prefix import prefix_sum
 

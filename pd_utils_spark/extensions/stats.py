@@ -112,6 +112,10 @@ def ks_2samp(
     Scale shape: per-value count agg (one shuffle, output O(distinct
     values)) -> distributed prefix sum over the value order -> one
     max/count aggregate. Nulls in ``valuecol`` are excluded.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     counts = _two_sample_counts(df, valuecol, groupcol, a, b)
     cum = prefix_sum(counts, "__v__", ["__na__", "__nb__"])
@@ -157,6 +161,10 @@ def mann_whitney_u(
     which needs only the exclusive prefix sum of the combined counts —
     the identical distributed-scan plan as :func:`ks_2samp`, O(distinct
     values) after the first shuffle.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     counts = _two_sample_counts(df, valuecol, groupcol, a, b).withColumn(
         "__nt__", F.col("__na__") + F.col("__nb__")
@@ -321,6 +329,10 @@ def fdr_bh(
     (range partition + parallel local scans + O(#partitions) offsets).
     The distinct-p -> q map joins back on the p value (AQE broadcasts
     it when small). Null p rows pass through with null ``out``.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     p = F.col(pcol)
     counts = (
@@ -434,7 +446,12 @@ def population_stability_index(
     ``bins``-element array broadcast as ONE row, and the current
     sample is assigned by counting edges below each value inside a
     column-level fold — the current stream never joins or sorts, one
-    O(bins) aggregation per side."""
+    O(bins) aggregation per side.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
+    """
     if bins < 2:
         raise ValueError(f"bins must be >= 2: {bins}")
     s = float(smoothing)
@@ -623,6 +640,10 @@ def kaplan_meier(
     prefix rather than ln(0)). Grouped survival is a ``product``
     window aggregate — pure IEEE multiplication in duration order, no
     libm round-trip.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.utils import to_list
     from pyspark.sql import Window
@@ -792,6 +813,10 @@ def conformal_split(
     prefix scan over that compressed frame (never a single-task
     rank window), and ``q_hat`` — one row — broadcasts back onto the
     test side for the coverage aggregate. Nothing is collected.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")

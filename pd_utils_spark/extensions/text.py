@@ -1509,6 +1509,10 @@ def zipf_fit(
     scan (:func:`pd_utils_spark.plans.prefix.prefix_sum` over the
     per-type frame), never a single-task total-order window; the OLS
     reduces to one sufficient-statistics aggregate.
+
+    Caches the input of its prefix scans
+    (:func:`~pd_utils_spark.plans.prefix.prefix_agg`): call
+    ``release_registered("prefix_agg")`` once the result is consumed.
     """
     from pd_utils_spark.plans.prefix import prefix_sum
 

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pd_utils_spark.utils import to_list
+from pd_utils_spark.utils import register_persisted, to_list
 
 __all__ = ["prefix_sum", "prefix_agg", "exact_ntile"]
 
@@ -68,6 +68,14 @@ def prefix_agg(
     setting). Null order keys sort first (Spark default); null values
     are skipped by the aggregate (exclusive-sum prefixes of nothing
     coalesce to 0; min/max stay null).
+
+    The range-partitioned input is persisted, so the local scan and the
+    partition totals share one partitioning. It stays cached until the
+    caller releases it: ``release_cached(result)`` (it is the result's
+    ``_pus_persisted``) or ``release_registered("prefix_agg")`` (from
+    :mod:`pd_utils_spark.utils`), once the result has been consumed.
+    Releasing it earlier lets a later action re-sample the range bounds
+    and return wrong prefixes.
     """
     if agg not in _AGGS:
         raise ValueError(f"agg must be one of {sorted(_AGGS)}: {agg!r}")
@@ -80,11 +88,19 @@ def prefix_agg(
     n = partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
+    # the local scan and the partition totals must see ONE range
+    # partitioning: the range bounds are sampled with a seed taken from
+    # the RDD id, so two evaluations of the exchange (the two branches
+    # prune different columns, which defeats exchange reuse) cut the
+    # keys at different bounds and the offsets stop matching. Both
+    # branches read this one cached relation.
     ranged = (
         df.repartitionByRange(n, *[F.col(c) for c in order_l])
         .sortWithinPartitions(*order_l)
         .withColumn("__pid__", F.spark_partition_id())
+        .persist()
     )
+    register_persisted("prefix_agg", [ranged])
     local_w = (
         Window.partitionBy("__pid__")
         .orderBy(*order_l)
@@ -113,9 +129,11 @@ def prefix_agg(
     out = local.join(F.broadcast(offsets), "__pid__")
     for c in val_l:
         out = out.withColumn(c + sfx, combine(F.col(f"__loc_{c}__"), F.col(f"__off_{c}__")))
-    return out.drop(
+    out = out.drop(
         "__pid__", *[f"__loc_{c}__" for c in val_l], *[f"__off_{c}__" for c in val_l]
     )
+    out._pus_persisted = [ranged]
+    return out
 
 
 def prefix_sum(
@@ -148,7 +166,9 @@ def exact_ntile(
     The global rank runs on per-distinct-value counts through the
     two-level prefix scan (never a total-order window); the
     (distinct value -> bucket) map joins back on the value. Null
-    ``col`` rows pass through with null ``out``.
+    ``col`` rows pass through with null ``out``. The scan's input
+    stays cached as :func:`prefix_agg` describes (the result's
+    ``_pus_persisted``).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1: {n}")
@@ -174,4 +194,6 @@ def exact_ntile(
     )
     # drop bmap's key by REFERENCE: a name-based drop("__v__") would
     # also remove the caller's column if it happens to share the name
-    return df.join(bmap, df[col] == bmap["__v__"], "left").drop(bmap["__v__"])
+    res = df.join(bmap, df[col] == bmap["__v__"], "left").drop(bmap["__v__"])
+    res._pus_persisted = ranked._pus_persisted
+    return res

@@ -2,21 +2,78 @@
 
 Spark-native re-expression of the reference's load / optimize modules
 (reference: pd_utils/load.py, pd_utils/optimize/).
+
+Parquet files are read through :func:`read_parquet`, which infers a
+file's schema once and re-infers only when the file or one of the
+session confs that shape inference changes; directories and globs are
+inferred on every read.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: Session confs that change the schema parquet inference returns; their
+#: values are part of :func:`read_parquet`'s memo key.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    a repeat read. Inference is a Spark job (one task reading the
+    footer) on every ``spark.read.parquet`` call; for a regular local
+    file the inferred schema is remembered under the file's identity
+    (absolute path, size, ``st_mtime_ns``, inode) plus the values of
+    ``_PARQUET_INFERENCE_CONFS``, and a repeat read passes it to
+    ``spark.read.schema``. Rewriting or replacing the file, or changing
+    one of those confs, re-infers. Directories, globs and non-local
+    URIs are not memoized: they are inferred on every read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ino,
+        *(spark.conf.get(c) for c in _PARQUET_INFERENCE_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    with _SCHEMA_MEMO_LOCK:  # the eviction is check-then-act
+        if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_SIZE:
+            _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+        _SCHEMA_MEMO[key] = schema
+    return df
+
 
 _EXT_READERS = {
     ".csv": lambda spark, path, **kw: spark.read.csv(
         path, header=kw.pop("header", True), inferSchema=kw.pop("inferSchema", True), **kw
     ),
-    ".parquet": lambda spark, path, **kw: spark.read.parquet(path),
+    ".parquet": lambda spark, path, **kw: read_parquet(spark, path),
     ".json": lambda spark, path, **kw: spark.read.json(path, **kw),
     ".orc": lambda spark, path, **kw: spark.read.orc(path),
     ".tsv": lambda spark, path, **kw: spark.read.csv(

@@ -7,6 +7,16 @@ State design for scale: state lives in the executor state store,
 partitioned by the grouping keys — per-key state must stay O(1)
 (scalars/counters, never row buffers) or the store becomes the
 bottleneck; set a timeout so abandoned keys are evicted.
+
+The sketch, sample and Bloom-filter gates read their versioned state
+(``b=<batch_id>`` directories), and the band gate its claims, with the
+writer's schema: the schema of the frame the read is unioned or joined
+with, or the fixed filter DDL. Those reads run no schema-inference
+job. A gate that consumes its new state
+twice writes the version and reads that committed version back
+(:func:`_commit_state`) instead of checkpointing it. The containment
+and MinHash history readers and :func:`read_latest_state` infer the
+schema on each read.
 """
 
 from __future__ import annotations
@@ -35,6 +45,9 @@ from pd_utils_spark.utils import release_registered, to_list
 #: tasks). Env-parameterised for cluster tuning
 #: (SPARK_GRAFT_SPREAD_TARGET_BYTES).
 _SPREAD_TARGET_BYTES = 64 * 1024
+
+#: Schema of a :func:`streaming_bloom_dedup` filter version.
+_BLOOM_DDL = "bloom array<bigint>, m_bits int, k int"
 
 
 def _spread_batch(batch_df: DataFrame) -> DataFrame:
@@ -278,11 +291,13 @@ def streaming_greedy_band_dedup(
         path = jvm.org.apache.hadoop.fs.Path(history_dir)
         fs = path.getFileSystem(jsc.hadoopConfiguration())
         if fs.exists(path):
-            claims = spark.read.parquet(history_dir)
             keyed = work.select(
                 F.col(idcol),
                 F.posexplode("__bks__").alias("band", "key"),
             )
+            claims = spark.read.schema(
+                keyed.select("band", "key").schema
+            ).parquet(history_dir)
             hit = (
                 keyed.join(claims, ["band", "key"], "left_semi")
                 .select(idcol)
@@ -378,7 +393,7 @@ def streaming_bloom_dedup(
         latest = _latest_bloom_version(spark, bloom_dir)
         old = None
         if latest is not None:
-            old = spark.read.parquet(f"{bloom_dir}/b={latest}")
+            old = spark.read.schema(_BLOOM_DDL).parquet(f"{bloom_dir}/b={latest}")
             batch = exact_dedup_against_bloom(
                 batch, old, textcol=textcol, idcol=idcol, verify=False
             )
@@ -387,9 +402,9 @@ def streaming_bloom_dedup(
         fresh = bloom_fingerprints(survivors, textcol, m_bits, k)
         merged = merge_blooms(old, fresh) if old is not None else fresh
         rows = merged.collect()  # one row by construction
-        spark.createDataFrame(
-            rows, "bloom array<bigint>, m_bits int, k int"
-        ).write.mode("overwrite").parquet(f"{bloom_dir}/b={batch_id}")
+        spark.createDataFrame(rows, _BLOOM_DDL).write.mode("overwrite").parquet(
+            f"{bloom_dir}/b={batch_id}"
+        )
         _prune_bloom_versions(spark, bloom_dir, keep_from=latest)
 
     writer = sdf.writeStream.foreachBatch(process).option(
@@ -427,12 +442,13 @@ def streaming_distinct_hll(
     batching-sensitive WITHIN that bound (see the sketches module
     docstring) — consumers size against the bound, not byte identity.
 
-    Replay safety mirrors :func:`streaming_bloom_dedup`: the sketch
-    table is VERSIONED (``sketch_dir/b=<batch_id>``, readers take the
-    latest committed version), a retried batch overwrites only its
-    own version (HLL union is idempotent — re-unioning the same
-    values is a register no-op), and the estimates snapshot is a full
-    overwrite, so downstream readers never see partial state.
+    Replay safety: the sketch table is VERSIONED
+    (``sketch_dir/b=<batch_id>``, committed-``_SUCCESS`` readers); a
+    batch merges the latest committed version STRICTLY OLDER than its
+    own id, so a retried batch rebuilds its version from the same
+    predecessor and overwrites only that version; the estimates
+    snapshot is a full overwrite, so downstream readers never see
+    partial state.
 
     Returns the started ``StreamingQuery``.
     """
@@ -443,12 +459,11 @@ def streaming_distinct_hll(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = hll_sketch_by(batch_df, byvars_l, col, lgk=lgk, out="sk")
-        latest = _latest_bloom_version(spark, sketch_dir)
+        latest = _prior_version(spark, sketch_dir, batch_id)
         if latest is not None:
-            old = spark.read.parquet(f"{sketch_dir}/b={latest}")
+            old = _read_state(spark, sketch_dir, latest, fresh.schema)
             fresh = hll_rollup(old.unionByName(fresh), byvars_l, "sk")
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sketch_dir}/b={batch_id}")
+        merged = _commit_state(fresh, sketch_dir, batch_id)
         (
             merged.select(
                 *byvars_l,
@@ -907,11 +922,11 @@ def streaming_sample_quantiles(
     BATCH-BOUNDARY-INSENSITIVE (any split of the same rows into
     micro-batches yields bit-identical state — merge is
     sort-truncate over row-keyed hashes) and equals the batch twin
-    built over the full history in one pass. Replay safety mirrors
-    :func:`streaming_bloom_dedup`: versioned state
-    (``sample_dir/b=<batch>``, committed-``_SUCCESS`` readers), and a
-    retried batch re-merges the SAME rows into a distinct-merge —
-    idempotent by construction.
+    built over the full history in one pass. Replay safety: versioned
+    state (``sample_dir/b=<batch>``, committed-``_SUCCESS`` readers);
+    a batch merges the latest committed version strictly older than
+    its own id, so a retried batch rebuilds its version from the same
+    predecessor and overwrites it.
 
     Returns the started ``StreamingQuery``.
     """
@@ -933,12 +948,11 @@ def streaming_sample_quantiles(
         fresh = sample_sketch_by(
             batch_df, byvars_l, col, id_cols=id_cols, k=k, out="sk"
         )
-        latest = _latest_bloom_version(spark, sample_dir)
+        latest = _prior_version(spark, sample_dir, batch_id)
         if latest is not None:
-            old = spark.read.parquet(f"{sample_dir}/b={latest}")
+            old = _read_state(spark, sample_dir, latest, fresh.schema)
             fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sample_dir}/b={batch_id}")
+        merged = _commit_state(fresh, sample_dir, batch_id)
         est = quantile_estimate(merged, "sk", list(qs), drop_sketch=False)
         (
             est.select(
@@ -985,16 +999,14 @@ def streaming_topk(
     (true heavy hitters never lost, counts never undercount, bounded
     overestimate).
 
-    Replay safety differs from the HLL/bottom-k rows in one
-    load-bearing way: frequent-items COMBINE IS NOT IDEMPOTENT
-    (re-merging the same batch double-counts, where HLL union and
-    bottom-k distinct-merge are no-ops), so a retried batch must
-    never merge the version it already committed. The reader
-    therefore takes the latest committed version STRICTLY OLDER than
-    the current batch id — a retry rebuilds its own version from the
-    same predecessor and overwrites it bit-identically. Versioned
-    dirs and committed-``_SUCCESS`` readers as in
-    :func:`streaming_bloom_dedup`.
+    Replay safety as in the HLL/bottom-k rows: the reader takes the
+    latest committed version STRICTLY OLDER than the current batch id,
+    so a retry rebuilds its own version from the same predecessor and
+    overwrites it bit-identically. Here that rule also guards the
+    counts: frequent-items COMBINE IS NOT IDEMPOTENT (re-merging the
+    same batch double-counts, where HLL union and bottom-k
+    distinct-merge are no-ops). Versioned dirs and committed-``_SUCCESS``
+    readers as in :func:`streaming_bloom_dedup`.
 
     Returns the started ``StreamingQuery``.
     """
@@ -1011,25 +1023,20 @@ def streaming_topk(
         fresh = topk_sketch_by(
             batch_df, byvars_l, col, max_items=max_items, out="sk"
         )
-        older = [
-            v for v in _bloom_versions(spark, sketch_dir) if v < batch_id
-        ]
-        if older:
-            old = spark.read.parquet(f"{sketch_dir}/b={older[-1]}")
+        latest = _prior_version(spark, sketch_dir, batch_id)
+        if latest is not None:
+            old = _read_state(spark, sketch_dir, latest, fresh.schema)
             fresh = topk_rollup(
                 old.unionByName(fresh), byvars_l, "sk", max_items=max_items
             )
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sketch_dir}/b={batch_id}")
+        merged = _commit_state(fresh, sketch_dir, batch_id)
         (
             topk_estimate(merged, "sk", k=k)
             .withColumn("as_of_batch", F.lit(batch_id).cast("bigint"))
             .write.mode("overwrite")
             .parquet(output_dir)
         )
-        _prune_bloom_versions(
-            spark, sketch_dir, keep_from=older[-1] if older else None
-        )
+        _prune_bloom_versions(spark, sketch_dir, keep_from=latest)
 
     writer = sdf.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir
@@ -1066,8 +1073,9 @@ def streaming_weighted_sample(
     Same two deterministic-merge properties as
     :func:`streaming_sample_quantiles`, inherited from the same
     sort-truncate: batch-boundary-INSENSITIVE state bit-for-bit, and
-    equality with the one-pass batch twin; replay-safe because the
-    distinct-merge of a retried batch's identical keys is a no-op.
+    equality with the one-pass batch twin; replay-safe as there: a
+    retried batch rebuilds its version from the version strictly
+    older than its own id.
     While a group's (positive-weight) rows fit in ``k`` the sample IS
     the group and the snapshot aggregates are exact.
 
@@ -1089,12 +1097,11 @@ def streaming_weighted_sample(
             batch_df, byvars_l, col, weight_col, id_cols=id_cols, k=k,
             out="sk",
         )
-        latest = _latest_bloom_version(spark, sample_dir)
+        latest = _prior_version(spark, sample_dir, batch_id)
         if latest is not None:
-            old = spark.read.parquet(f"{sample_dir}/b={latest}")
+            old = _read_state(spark, sample_dir, latest, fresh.schema)
             fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = fresh.localCheckpoint(eager=True)  # consumed twice
-        merged.write.mode("overwrite").parquet(f"{sample_dir}/b={batch_id}")
+        merged = _commit_state(fresh, sample_dir, batch_id)
         (
             merged.select(
                 *byvars_l,
@@ -1120,6 +1127,33 @@ def streaming_weighted_sample(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _prior_version(spark, state_dir: str, batch_id: int) -> int | None:
+    """Newest committed state version strictly below ``batch_id``. A
+    replayed batch whose own version was already committed must not
+    read it: :func:`_commit_state` overwrites that very directory."""
+    versions = [v for v in _bloom_versions(spark, state_dir) if v < batch_id]
+    return versions[-1] if versions else None
+
+
+def _read_state(spark, state_dir: str, version: int, schema) -> DataFrame:
+    """State version ``b=<version>`` of ``state_dir``, read with the
+    schema its writer had (the schema of the frame the read is unioned
+    with), so the read runs no schema-inference job."""
+    return spark.read.schema(schema).parquet(f"{state_dir}/b={version}")
+
+
+def _commit_state(frame: DataFrame, state_dir: str, batch_id: int) -> DataFrame:
+    """Write ``frame`` as state version ``b=<batch_id>`` and return that
+    committed version, read back with ``frame``'s schema. The caller's
+    second consumer (the snapshot write) then reads the same files the
+    next batch will read: ``frame`` is computed once, with no
+    checkpoint job and no persisted RDD left behind. ``frame`` must not
+    read ``b=<batch_id>`` itself (take the prior version from
+    :func:`_prior_version`): the overwrite deletes it first."""
+    frame.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
+    return _read_state(frame.sparkSession, state_dir, batch_id, frame.schema)
 
 
 def read_latest_state(spark, state_dir: str):

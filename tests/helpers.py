@@ -44,3 +44,14 @@ def assert_df_equal(result_df, expect: pd.DataFrame, sort_cols=None, rtol=1e-9, 
             assert g_filled.tolist() == e_filled.tolist(), (
                 f"column {c}: {g_filled.tolist()} != {e_filled.tolist()}"
             )
+
+
+def last_job_id(spark) -> int:
+    """Id of the newest job in Spark's status store (-1 before any), read
+    after the listener bus has delivered every event posted so far. Job
+    ids are consecutive, so the difference of two readings is the number
+    of jobs submitted in between."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1

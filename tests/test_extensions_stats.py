@@ -102,6 +102,22 @@ def test_prefix_sum_more_partitions_than_rows(spark):
     assert got == {1: 10, 2: 30}
 
 
+def test_prefix_sum_when_branches_prune_differently(spark):
+    """A column only the local scan carries keeps its range exchange
+    apart from the totals' one. On input large enough that the range
+    bounds are sampled, both must still see the same partitioning."""
+    from pd_utils_spark.utils import release_cached
+
+    df = spark.range(0, 20000, 1, 4).select(
+        F.col("id").alias("o"), F.lit(1).alias("x"), (F.col("id") * 2).alias("y")
+    )
+    out = prefix_sum(df, "o", "x", partitions=8)
+    try:
+        assert out.filter(F.col("x_cum") != F.col("y") / 2 + 1).count() == 0
+    finally:
+        assert release_cached(out) == 1
+
+
 def test_prefix_sum_validation(spark):
     df = spark.createDataFrame([(1, 1)], ["o", "x"])
     with pytest.raises(ValueError):

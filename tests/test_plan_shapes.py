@@ -1001,3 +1001,51 @@ class TestRound8ContinuationShapes:
         assert "partial_count" in plan
         assert "partial_collect_set" in plan
         assert "windowspecdefinition" not in plan.lower()
+
+
+class TestJobCounts:
+    """Upper bounds on the Spark jobs one warm call submits, the call
+    plus its noop write, for a driver-loop query and a streaming query
+    at sf0.001. A schema-inference, checkpoint or count job brought back
+    into either path fails here. The bounds are the counts measured when
+    the guard was written; before the schema memo, the observed round
+    counts and the state write-then-read, the same calls ran 19 and 17
+    jobs."""
+
+    @pytest.mark.parametrize("name, bound", [("k_core", 12), ("streaming_topk", 12)])
+    def test_warm_call_job_count(self, spark, li, name, bound):
+        import os
+        from urllib.parse import urlparse
+
+        import __spark_entry__ as entry
+        from tests.helpers import last_job_id
+
+        sf_dir = os.path.dirname(urlparse(li.inputFiles()[0]).path)
+        query = entry.queries()[name]
+
+        def call():
+            query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        call()  # a first call may also infer its source table's schema
+        before = last_job_id(spark)
+        call()
+        jobs = last_job_id(spark) - before
+        assert 0 < jobs <= bound, f"{name} ran {jobs} jobs, bound {bound}"
+
+
+def test_prefix_entry_query_releases_its_cache(spark, li):
+    """An entry query over ``prefix_agg`` returns a result that no
+    longer reads the persisted range-partitioned input, and releases
+    that input before it returns."""
+    import os
+    from urllib.parse import urlparse
+
+    import __spark_entry__ as entry
+    from pd_utils_spark.utils import _PERSIST_REGISTRY, release_registered
+
+    sf_dir = os.path.dirname(urlparse(li.inputFiles()[0]).path)
+    release_registered("prefix_agg")  # other tests may leave some
+    out = entry.queries()["mann_whitney"](spark, sf_dir)
+    assert "prefix_agg" not in _PERSIST_REGISTRY
+    assert "rangepartitioning" not in plan_of(out).lower()
+    assert out.count() == 1

@@ -16,8 +16,10 @@ from pd_utils_spark.sources.load import (
     load_sas,
     optimized_df,
     read_file,
+    read_parquet,
     to_copy_paste,
 )
+from tests.helpers import last_job_id
 
 PDF = pd.DataFrame({"a": [1, 2], "b": ["x", "y"], "c": [1.5, 2.5]})
 
@@ -155,3 +157,61 @@ class TestReadFileNewExtensions:
 
         with _pytest.raises(NotImplementedError, match="xyz"):
             read_file(spark, "file.xyz")
+
+
+class TestReadParquetSchemaMemo:
+    """read_parquet infers a file's schema once and reuses it while the
+    file and the inference confs are unchanged."""
+
+    def test_repeat_read_runs_no_job(self, spark, tmp_path):
+        p = str(tmp_path / "t.parquet")
+        PDF.to_parquet(p)
+        first = read_parquet(spark, p)
+        before = last_job_id(spark)
+        again = read_parquet(spark, p)
+        via_dispatch = read_file(spark, p)
+        assert last_job_id(spark) == before
+        assert again.schema == first.schema == via_dispatch.schema
+        assert sorted(r.a for r in again.collect()) == [1, 2]
+
+    def test_rewrite_with_other_columns_reinfers(self, spark, tmp_path):
+        p = str(tmp_path / "t.parquet")
+        PDF.to_parquet(p)
+        assert read_parquet(spark, p).columns == ["a", "b", "c"]
+        pd.DataFrame({"z": [1.0, 2.0, 3.0]}).to_parquet(p)
+        before = last_job_id(spark)
+        out = read_parquet(spark, p)
+        assert last_job_id(spark) > before  # the inference job ran
+        assert out.columns == ["z"]
+        assert sorted(r.z for r in out.collect()) == [1.0, 2.0, 3.0]
+
+    def test_inference_conf_change_reinfers(self, spark, tmp_path):
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        p = str(tmp_path / "t.parquet")
+        PDF.to_parquet(p)
+        prev = spark.conf.get(key)
+        read_parquet(spark, p)
+        try:
+            spark.conf.set(key, "false" if prev == "true" else "true")
+            before = last_job_id(spark)
+            read_parquet(spark, p)
+            assert last_job_id(spark) > before
+        finally:
+            spark.conf.set(key, prev)
+
+    def test_directory_and_glob_paths(self, spark, tmp_path):
+        d = tmp_path / "parts"
+        d.mkdir()
+        PDF.iloc[:1].to_parquet(d / "p0.parquet")
+        PDF.iloc[1:].to_parquet(d / "p1.parquet")
+        for path in (str(d), str(d / "*.parquet")):
+            out = read_parquet(spark, path)
+            assert out.columns == ["a", "b", "c"]
+            assert sorted(r.a for r in out.collect()) == [1, 2]
+        # a directory is inferred on every read, so a changed member
+        # file is seen
+        pd.DataFrame({"a": [3], "b": ["z"], "c": [3.5], "d": [True]}).to_parquet(
+            d / "p2.parquet"
+        )
+        out = read_parquet(spark, str(d))
+        assert sorted(r.a for r in out.collect()) == [1, 2, 3]

@@ -1823,6 +1823,87 @@ class TestStreamingWeightedSample:
             shutil.rmtree(base, ignore_errors=True)
 
 
+class TestStateGateReplay:
+    """A batch whose state version was committed but whose commit-log
+    entry was not (a crash between the two) replays on restart. The
+    replay must rebuild its version from the version below it and give
+    the same snapshot and state as the first run."""
+
+    @pytest.mark.parametrize(
+        "gate",
+        [
+            "streaming_distinct_hll",
+            "streaming_sample_quantiles",
+            "streaming_topk",
+            "streaming_weighted_sample",
+        ],
+    )
+    def test_replayed_batch_rebuilds_its_version(self, spark, gate):
+        import os
+
+        from pyspark.sql.types import LongType
+
+        base = tempfile.mkdtemp(prefix="replay_")
+        src, outd, std, ckpt = (
+            f"{base}/{d}" for d in ("src", "out", "state", "ckpt")
+        )
+        os.makedirs(src)
+        try:
+            schema = StructType(
+                [
+                    StructField("event_type", StringType()),
+                    StructField("event_id", LongType()),
+                    StructField("user_id", LongType()),
+                    StructField("item", StringType()),
+                    StructField("value", DoubleType()),
+                    StructField("weight", DoubleType()),
+                ]
+            )
+            for b in range(2):
+                rows = [
+                    {
+                        "event_type": "gh"[i % 2],
+                        "event_id": 10 * b + i,
+                        "user_id": (b + i) % 4,
+                        "item": "xyz"[(b * i) % 3],
+                        "value": float(10 * b + i),
+                        "weight": 1.0 + i,
+                    }
+                    for i in range(6)
+                ]
+                with open(f"{src}/b{b}.json", "w") as f:
+                    f.write("\n".join(json.dumps(r) for r in rows))
+
+            def run():
+                stream = (
+                    spark.readStream.format("json")
+                    .schema(schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .load(src)
+                )
+                q = getattr(W, gate)(stream, outd, std, ckpt, available_now=True)
+                try:
+                    q.awaitTermination(120)
+                finally:
+                    q.stop()
+                assert q.exception() is None
+                snap = sorted(map(tuple, spark.read.parquet(outd).collect()))
+                state = spark.read.parquet(f"{std}/b=1")
+                if gate == "streaming_distinct_hll":
+                    state = state.select("event_type", F.hll_sketch_estimate("sk"))
+                return snap, sorted(map(tuple, state.collect()))
+
+            first = run()
+            assert {r[-1] for r in first[0]} == {1}  # as_of_batch
+            os.remove(f"{ckpt}/commits/1")
+            if os.path.exists(f"{ckpt}/commits/.1.crc"):
+                os.remove(f"{ckpt}/commits/.1.crc")
+            assert run() == first
+            assert os.path.exists(f"{ckpt}/commits/1")
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
+
 class TestStreamingContainmentDedup:
     def test_truncations_blocked_within_and_across_batches(self, spark):
         import os
