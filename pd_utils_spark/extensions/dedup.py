@@ -718,7 +718,7 @@ def _greedy_band_filter(
         # the map-heavy shingle+minhash pipeline upstream would
         # execute once per reference, doubling per pass. Materialize
         # each pass's input so every pass computes exactly once; the
-        # streaming gate releases these after its eager checkpoint,
+        # streaming gate releases these after each batch, failed or not,
         # batch callers via release_registered("greedy_band_filter").
         work = materialize(work)
         register_persisted("greedy_band_filter", [work])

@@ -1,27 +1,63 @@
-"""Custom stateful streaming operators via
-``applyInPandasWithState`` — for semantics the built-in window
-aggregations can't express (running totals across micro-batches,
-custom session logic, online statistics).
+"""Streaming operators beyond the built-in window aggregations: keyed
+dedup and sessionization through the engine's state store, and
+``foreachBatch`` gates whose cross-batch state lives in versioned
+parquet directories.
 
-State design for scale: state lives in the executor state store,
-partitioned by the grouping keys — per-key state must stay O(1)
-(scalars/counters, never row buffers) or the store becomes the
-bottleneck; set a timeout so abandoned keys are evicted.
+State-store operators (``applyInPandasWithState``, keyed
+``dropDuplicates``) keep per-key state O(1) — scalars and counters,
+never row buffers — and take a timeout or watermark so abandoned keys
+are evicted.
 
-The sketch, sample and Bloom-filter gates read their versioned state
-(``b=<batch_id>`` directories), and the band gate its claims, with the
-writer's schema: the schema of the frame the read is unioned or joined
-with, or the fixed filter DDL. Those reads run no schema-inference
-job. A gate that consumes its new state
-twice writes the version and reads that committed version back
-(:func:`_commit_state`) instead of checkpointing it. The containment
-and MinHash history readers and :func:`read_latest_state` infer the
-schema on each read.
+**Versioned state.** Every ``foreachBatch`` gate keeps its state by
+one protocol, implemented once by the private helpers below
+(``_versions`` through ``_compact``); the gate docstrings refer here.
+
+- *Layout.* A state dir holds one directory per version: ``b=<n>``,
+  written by micro-batch ``n``, and ``c=<n>``, a compacted generation
+  that folds every delta up to ``n``. A version counts only once its
+  ``_SUCCESS`` marker exists: the directory appears before any file
+  commits, so a crash mid-write leaves nothing a reader lists. The
+  constant-state gates (Bloom filter, HLL, bottom-k, frequent items)
+  keep one frame per version. The two artifact gates keep one
+  subdirectory per artifact, each versioned the same way —
+  containment ``sets``, ``docs``, ``dfreq``, ``index``; MinHash
+  ``shingles``, ``docs``, ``keys`` — and ``index`` / ``keys``, the
+  enumerating artifact, commits last: readers list versions from it,
+  so a version listed there implies its siblings committed.
+- *Read strictly below.* Batch ``n`` reads the newest committed
+  version below ``n`` (constant-state gates), or the newest committed
+  ``c=`` below ``n`` plus every newer committed ``b=`` below ``n``
+  (artifact gates). A batch replayed after a crash therefore never
+  reads the version it is about to overwrite: it rebuilds ``b=<n>``
+  from the same predecessor and overwrites it. Constant-state reads
+  pass the writer's schema, so they run no schema-inference job.
+  :func:`read_latest_state` reads the newest committed version with no
+  bound.
+- *Commit.* A version is written with mode ``overwrite`` and read back
+  (``_commit_version``), so a second consumer reads the committed
+  files instead of recomputing the frame. The artifact gates write the
+  other artifacts concurrently, then the enumerating one, and append
+  their output only after all state committed: output is
+  at-least-once (a replay re-appends; finish downstream with
+  ``exact_dedup`` on id) while state is exactly-once.
+- *Prune.* After its commit a constant-state gate deletes, best
+  effort, every version below the one it read, so the previous
+  version survives a crash mid-write of the current one.
+- *Compaction* (:func:`compact_containment_state`,
+  :func:`compact_minhash_state`; run with the stream stopped) folds
+  every committed delta except the newest into ``c=<top>``: the
+  newest delta's batch may replay, and must still resolve complete
+  state strictly below its own id. The generation is written to new
+  paths, the enumerating artifact last; the folded deltas and the
+  previous generation are then pruned, best effort. The fold
+  re-applies the flood cap the builders stamped into the artifacts
+  (the minimum across pieces; see :func:`_stamped_max_bucket_pieces`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -42,8 +78,7 @@ from pd_utils_spark.utils import release_registered, to_list
 #: single-file micro-batch fans out. The driver's r11 scaling run
 #: showed the same batches ~2x FASTER at 8-way than at the blanket
 #: 32-way spread, which this grain reproduces (~600 KB batch -> ~10
-#: tasks). Env-parameterised for cluster tuning
-#: (SPARK_GRAFT_SPREAD_TARGET_BYTES).
+#: tasks).
 _SPREAD_TARGET_BYTES = 64 * 1024
 
 #: Schema of a :func:`streaming_bloom_dedup` filter version.
@@ -64,21 +99,19 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
     driver's bench showed both big gates anti-scaling with cores: a
     KB-scale batch paid a 32-way exchange plus 32-task stages per
     downstream stage, pure scheduling latency). The target partition
-    count is ``ceil(estimated input bytes / target_bytes)`` capped at
-    ``defaultParallelism`` — proportional to the work, per guide §2.5
-    "spread proportional to input, not blindly to core count". The
-    estimate comes from the optimized logical plan's stats (file sizes
-    for a file-source micro-batch — no job, no collect). When the
-    estimate is unavailable or absurd (relations without stats default
-    to Long.MaxValue) the cap keeps the old conservative behavior.
-    At scale this stays a structural no-op: batches bigger than
-    ``target_bytes x defaultParallelism`` already arrive in many
-    splits and hit the ``n >= want`` early exit. Round-robin
+    count is ``ceil(estimated input bytes / _SPREAD_TARGET_BYTES)``
+    capped at ``defaultParallelism`` — spread proportional to the
+    input, not blindly to the core count. The estimate comes from the
+    optimized logical plan's stats (file sizes for a file-source
+    micro-batch — no job, no collect). When the estimate is
+    unavailable or absurd (relations without stats default to
+    Long.MaxValue) the cap keeps the old conservative behavior. At scale this stays a structural no-op: batches bigger
+    than ``_SPREAD_TARGET_BYTES x defaultParallelism`` already arrive
+    in many splits and hit the ``n >= want`` early exit. Round-robin
     repartition is retry-safe (Spark sorts before round-robin by
     default) and every gate result is partitioning-independent by
     construction."""
     import math
-    import os
 
     sc = batch_df.sparkSession.sparkContext
     try:
@@ -89,11 +122,6 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
     if n >= p:
         return batch_df
     try:
-        target = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_TARGET_BYTES", _SPREAD_TARGET_BYTES
-            )
-        )
         est = int(
             str(
                 batch_df._jdf.queryExecution()
@@ -102,12 +130,330 @@ def _spread_batch(batch_df: DataFrame) -> DataFrame:
                 .sizeInBytes()
             )
         )
-        want = min(p, max(1, math.ceil(est / max(target, 1))))
+        want = min(p, max(1, math.ceil(est / _SPREAD_TARGET_BYTES)))
     except Exception:  # pragma: no cover — stats unavailable: be
         want = p  # conservative (the r11 behavior)
     if n < want:
         return batch_df.repartition(want)
     return batch_df
+
+
+def _fs(spark, path: str):
+    """``(FileSystem, Path class)`` for ``path``: the Hadoop file
+    system that holds it, and the JVM ``Path`` constructor."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(conf), Path
+
+
+def _versions(
+    spark, state_dir: str, prefix: str = "b=", committed_only: bool = True
+) -> list[int]:
+    """Sorted version ids under ``state_dir`` in the ``prefix``
+    namespace (``b=`` deltas or ``c=`` generations). ``committed_only``
+    keeps only versions whose ``_SUCCESS`` marker exists. Listing
+    explicitly (not try/except around a read) makes a transient
+    storage error fail and retry the batch instead of passing for
+    "no state", which would admit duplicates."""
+    fs, Path = _fs(spark, state_dir)
+    if not fs.exists(Path(state_dir)):
+        return []
+    out = []
+    for st in fs.listStatus(Path(state_dir)):
+        name = st.getPath().getName()
+        v = name[len(prefix):]
+        if name.startswith(prefix) and v.isdigit() and (
+            not committed_only
+            or fs.exists(Path(f"{state_dir}/{name}/_SUCCESS"))
+        ):
+            out.append(int(v))
+    return sorted(out)
+
+
+def _newest_version(
+    spark, state_dir: str, below: int | None = None, prefix: str = "b="
+) -> int | None:
+    """Newest committed version strictly below ``below`` (any, when
+    ``None``), or ``None`` when there is none."""
+    vs = [
+        v
+        for v in _versions(spark, state_dir, prefix)
+        if below is None or v < below
+    ]
+    return vs[-1] if vs else None
+
+
+def _read_version(spark, state_dir: str, version: int, schema=None):
+    """Version ``b=<version>``; with the writer's ``schema`` the read
+    runs no schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{state_dir}/b={version}")
+
+
+def _commit_version(frame: DataFrame, state_dir: str, batch_id: int):
+    """Write ``frame`` as version ``b=<batch_id>`` and return that
+    committed version, read back with ``frame``'s schema: a second
+    consumer reads the written files, with no checkpoint job and no
+    persisted RDD left behind. ``frame`` must not read ``b=<batch_id>``
+    itself (read strictly below): the overwrite deletes it first."""
+    frame.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
+    return _read_version(frame.sparkSession, state_dir, batch_id, frame.schema)
+
+
+def _delete_pieces(spark, dirs, names) -> None:
+    """Best-effort deletion of version dirs ``names`` under each of
+    ``dirs``. Cosmetic: readers already skip superseded versions, so a
+    failed delete never fails the caller."""
+    for d in dirs:
+        fs, Path = _fs(spark, d)
+        for name in names:
+            try:
+                fs.delete(Path(f"{d}/{name}"), True)
+            except Exception:
+                pass
+
+
+def _prune_versions(spark, state_dir: str, keep_from: int | None) -> None:
+    """Delete every version below ``keep_from``, uncommitted ones
+    included (nothing when ``None``)."""
+    if keep_from is not None:
+        stale = _versions(spark, state_dir, committed_only=False)
+        _delete_pieces(
+            spark, [state_dir], [f"b={v}" for v in stale if v < keep_from]
+        )
+
+
+def _state_pieces(spark, root: str, enum_sub: str, below: int) -> list[str]:
+    """Version pieces of an artifact state dir strictly below
+    ``below``: the newest committed generation ``c=<c>`` plus every
+    committed delta ``b=<v>`` with ``c < v``, listed from the
+    enumerating artifact ``enum_sub``."""
+    d = f"{root}/{enum_sub}"
+    c0 = _newest_version(spark, d, below, prefix="c=")
+    lo = -1 if c0 is None else c0
+    bs = [f"b={v}" for v in _versions(spark, d) if lo < v < below]
+    return ([f"c={c0}"] if c0 is not None else []) + bs
+
+
+class _Artifacts(NamedTuple):
+    """An artifact gate's state: ``subs`` in commit order, the
+    enumerating artifact last; ``cap_cols`` the flood-cap bucket of
+    that artifact (the last column carries the stamped cap) and
+    ``metric`` its observe label; ``fold`` the transform a read of
+    several pieces needs."""
+
+    subs: tuple[str, ...]
+    cap_cols: tuple[str, ...]
+    metric: str
+    fold: Callable[[dict], dict] = dict
+
+
+def _sum_dfreq(frames: dict) -> dict:
+    """Exact history document frequency: the sum of the ``dfreq``
+    pieces (a compacted generation's table is already a sum, so
+    re-summing it with newer deltas stays exact)."""
+    dfreq = frames["dfreq"].groupBy("__tok__").agg(
+        F.sum("__df__").alias("__df__")
+    )
+    return {**frames, "dfreq": dfreq}
+
+
+_CONTAINMENT = _Artifacts(
+    ("dfreq", "sets", "index"), ("__tok__",), "containment_against_bucket",
+    _sum_dfreq,
+)
+_MINHASH = _Artifacts(
+    ("shingles", "keys"), ("band", "band_key"), "lsh_bucket_cap"
+)
+
+
+def _read_artifacts(spark, root: str, spec: _Artifacts, pieces) -> dict:
+    frames = {
+        s: spark.read.parquet(*[f"{root}/{s}/{p}" for p in pieces])
+        for s in spec.subs
+    }
+    return spec.fold(frames)
+
+
+def _artifact_state(spark, root: str, spec: _Artifacts, below: int):
+    """The accumulated artifacts strictly below batch ``below``, in
+    reverse commit order (containment ``(index, sets, dfreq)``,
+    MinHash ``(keys, shingles)``), or ``None`` when no committed state
+    qualifies."""
+    pieces = _state_pieces(spark, root, spec.subs[-1], below)
+    if not pieces:
+        return None
+    frames = _read_artifacts(spark, root, spec, pieces)
+    return tuple(frames[s] for s in reversed(spec.subs))
+
+
+def _commit_artifacts(root: str, batch_id: int, frames: dict) -> None:
+    """Commit ``frames`` (artifact subdir -> frame, enumerating
+    artifact last) as version ``b=<batch_id>``: the others
+    concurrently, then the last one once they all returned (a failed
+    write raises through ``.result()``). Each pool callable is wrapped
+    with ``inheritable_thread_target`` so the batch's job group,
+    description and tags reach its writes, and ``query.stop()``
+    cancels them; one wrap per write, because a wrap clones the local
+    properties once and concurrent jobs must not share the clone."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    *first, last = frames
+    spark = frames[last].sparkSession
+    with ThreadPoolExecutor(max_workers=len(first)) as pool:
+        futs = [
+            pool.submit(
+                inheritable_thread_target(spark)(_commit_version),
+                frames[s], f"{root}/{s}", batch_id,
+            )
+            for s in first
+        ]
+        for f in futs:
+            f.result()
+    _commit_version(frames[last], f"{root}/{last}", batch_id)
+
+
+def _stamped_max_bucket_pieces(
+    spark, piece_dirs: list[str], col: str
+) -> int | None:
+    """Resolve the build-time flood cap across a FOLD's state pieces
+    by reading each piece's own parquet footer (a merged
+    multi-path read surfaces whichever piece's schema Spark samples,
+    so a stream restarted with a different ``max_bucket`` across
+    deltas would be recapped — or not — non-deterministically). The
+    builders (``minhash_history_frames``, ``containment_index_frames``)
+    stamp the cap they applied into ``col``'s metadata.
+    Explicit policy: the MINIMUM stamp across stamped pieces (the
+    tightest flood bound any delta was built under — recapping is a
+    protective bound, so the conservative merge is the smallest cap);
+    ``None`` when NO piece is stamped (a fully-uncapped build folds
+    losslessly). Pieces written uncapped alongside capped ones still
+    fold under the capped pieces' minimum — the fold's job is
+    re-bounding cross-delta growth, which an uncapped delta does not
+    exempt its neighbors from."""
+    stamps = []
+    for d in piece_dirs:
+        schema = spark.read.parquet(d).schema
+        if col in schema.names:
+            mb = (schema[col].metadata or {}).get("max_bucket")
+            if mb is not None:
+                stamps.append(int(mb))
+    return min(stamps) if stamps else None
+
+
+def _compact(
+    spark, root: str, spec: _Artifacts, prune: bool, max_bucket, recap: bool
+):
+    """Fold an artifact state dir's deltas, all but the newest, into
+    ``c=<top>`` (module docstring). ``max_bucket=None`` recaps with the
+    stamped cap; ``recap=False`` folds losslessly. Returns ``top``, or
+    the existing generation when there is nothing to fold."""
+    if max_bucket is not None and int(max_bucket) <= 0:
+        # _cap_buckets would drop EVERY bucket and wipe the fold
+        raise ValueError(f"max_bucket must be >= 1: {max_bucket}")
+    enum = spec.subs[-1]
+    c0 = _newest_version(spark, f"{root}/{enum}", prefix="c=")
+    fold = [
+        v for v in _versions(spark, f"{root}/{enum}") if c0 is None or v > c0
+    ][:-1]
+    if not fold:
+        return c0
+    top = fold[-1]
+    pieces = _state_pieces(spark, root, enum, below=top + 1)
+    frames = _read_artifacts(spark, root, spec, pieces)
+    mb = max_bucket
+    if mb is None and recap:
+        mb = _stamped_max_bucket_pieces(
+            spark, [f"{root}/{enum}/{p}" for p in pieces], spec.cap_cols[-1]
+        )
+    if mb is not None and recap:
+        from pd_utils_spark.extensions.dedup import _cap_buckets
+
+        frames[enum] = _cap_buckets(
+            frames[enum], list(spec.cap_cols), mb, spec.metric
+        )
+    for sub in spec.subs:
+        frames[sub].write.mode("overwrite").parquet(f"{root}/{sub}/c={top}")
+    if prune:
+        _delete_pieces(
+            spark, [f"{root}/{s}" for s in reversed(spec.subs)], pieces
+        )
+    return top
+
+
+def read_latest_state(spark, state_dir: str):
+    """Public batch-side reader for any versioned streaming-state dir
+    this module writes (``streaming_bloom_dedup`` filters,
+    ``streaming_distinct_hll`` sketches, ``streaming_sample_quantiles``
+    and ``streaming_weighted_sample`` samples, ``streaming_topk``
+    sketches): returns ``(version, DataFrame)`` for the newest
+    COMMITTED version (module docstring) — a reader racing a crash
+    mid-write never sees partial state — or ``(None, None)`` when no
+    committed version exists yet. This is the handoff point between
+    the continuously-running stream and downstream batch jobs: join
+    yesterday's Bloom filter into an ingest gate, roll a week of
+    per-day sample sketches up with ``bottomk_rollup``, estimate from
+    the live HLL table — all without touching the stream's
+    checkpoint."""
+    v = _newest_version(spark, state_dir)
+    if v is None:
+        return None, None
+    return v, _read_version(spark, state_dir, v)
+
+
+def _start_gate(sdf, process, checkpoint_dir, available_now, release=()):
+    """Start ``process`` as a ``foreachBatch`` gate (checkpointed at
+    ``checkpoint_dir``; ``available_now`` drains what is available and
+    stops) and return the ``StreamingQuery``. After every batch,
+    failed or not, the frames operators persisted under the
+    ``release`` registry labels are released, so per-batch persists
+    never accumulate over a long-running stream."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            process(batch_df, batch_id)
+        finally:
+            for label in release:
+                release_registered(label)
+
+    writer = sdf.writeStream.foreachBatch(run).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _summary_gate(
+    sdf, output_dir, state_dir, checkpoint_dir, available_now,
+    sketch, merge, snapshot,
+):
+    """Start a constant-state gate over a mergeable summary. Per
+    batch: ``sketch`` the batch; ``merge`` it with the version read
+    strictly below the batch (the two frames unioned by name); commit
+    the result as the batch's version; overwrite ``output_dir`` with
+    ``snapshot`` of the committed state plus ``as_of_batch``; prune
+    (module docstring). The snapshot is a full overwrite, so its
+    readers never see partial state."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        fresh = sketch(batch_df)
+        prior = _newest_version(spark, state_dir, below=batch_id)
+        if prior is not None:
+            old = _read_version(spark, state_dir, prior, fresh.schema)
+            fresh = merge(old.unionByName(fresh))
+        (
+            snapshot(_commit_version(fresh, state_dir, batch_id))
+            .withColumn("as_of_batch", F.lit(batch_id).cast("bigint"))
+            .write.mode("overwrite")
+            .parquet(output_dir)
+        )
+        _prune_versions(spark, state_dir, keep_from=prior)
+
+    return _start_gate(sdf, process, checkpoint_dir, available_now)
 
 
 def streaming_exact_dedup(
@@ -241,10 +587,11 @@ def streaming_greedy_band_dedup(
     full text history (no exact verification — see the batch twin's
     precision note).
 
-    Exactly-once caveat: same as :func:`streaming_minhash_dedup` —
-    appends are at-least-once on batch retry, and the history check
-    makes replays SAFE (a replayed doc's keys are already claimed, so
-    it drops); finish downstream with ``exact_dedup`` on id.
+    Exactly-once caveat: the claims table is one append-only table,
+    not versioned state. Appends are at-least-once on batch retry,
+    and the history check makes replays SAFE (a replayed doc's keys
+    are already claimed, so it drops); finish downstream with
+    ``exact_dedup`` on id.
 
     Batch-boundary caveat: the CROSS-batch rule is first-claim-wins —
     a later batch's lower-id document loses to an earlier batch's
@@ -286,11 +633,8 @@ def streaming_greedy_band_dedup(
         # explicit existence check, not try/except: a transient
         # storage error must fail (and retry) the batch — treating it
         # as "no history" would admit duplicates permanently
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        path = jvm.org.apache.hadoop.fs.Path(history_dir)
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        if fs.exists(path):
+        fs, Path = _fs(spark, history_dir)
+        if fs.exists(Path(history_dir)):
             keyed = work.select(
                 F.col(idcol),
                 F.posexplode("__bks__").alias("band", "key"),
@@ -307,22 +651,17 @@ def streaming_greedy_band_dedup(
         survivors = _greedy_band_filter(work, idcol, bands).localCheckpoint(
             eager=True
         )  # written twice below
-        # the eager checkpoint has materialized the survivor set, so
-        # the per-pass frames _greedy_band_filter persisted are now
-        # superseded — release them here or they accumulate across
-        # micro-batches for the life of the stream
-        release_registered("greedy_band_filter")
         survivors.drop("__bks__").write.mode("append").parquet(output_dir)
         survivors.select(
             F.posexplode("__bks__").alias("band", "key")
         ).write.mode("append").parquet(history_dir)
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    # the eager checkpoint materializes the survivor set, so the
+    # per-pass frames _greedy_band_filter persisted are superseded
+    return _start_gate(
+        sdf, process, checkpoint_dir, available_now,
+        release=("greedy_band_filter",),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_bloom_dedup(
@@ -342,7 +681,7 @@ def streaming_bloom_dedup(
     whose fingerprint the accumulated Bloom filter (probably) already
     holds, append survivors to ``output_dir``, and fold their
     fingerprints into the filter (:func:`merge_blooms`), stored as a
-    one-row parquet at ``bloom_dir``.
+    one-row versioned state at ``bloom_dir``.
 
     Why it exists: every other streaming dedup here
     (:func:`streaming_minhash_dedup`'s text history,
@@ -364,16 +703,12 @@ def streaming_bloom_dedup(
     :func:`streaming_greedy_band_dedup`), and false drops depend on
     the filter's accumulated fill.
 
-    Replay safety: survivors append BEFORE the filter is written. The
-    filter state is VERSIONED — each batch writes
-    ``bloom_dir/b=<batch_id>`` and readers take the latest version —
-    so there is no delete-then-rewrite window in which a crash (or a
-    concurrent reader) sees a missing filter; a retried batch
-    overwrites only its own version directory (idempotent: OR of the
-    same fingerprints is a no-op) and the output re-append is the
-    standard at-least-once caveat — finish downstream with
-    ``exact_dedup`` on id. Versions older than the previous one are
-    best-effort pruned.
+    Replay safety: the filter is versioned state (module docstring):
+    a batch probes the filter committed strictly below its own id.
+    Survivors append BEFORE the filter version is written, so a
+    retried batch re-derives the same survivors, re-appends them
+    (at-least-once output — finish downstream with ``exact_dedup`` on
+    id) and rewrites only its own version.
 
     Returns the started ``StreamingQuery``.
     """
@@ -387,13 +722,10 @@ def streaming_bloom_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = exact_dedup(batch_df, textcol, idcol)
-        # explicit listing (not try/except around the read): a
-        # transient storage error must fail and retry the batch —
-        # treating it as "no history" would admit duplicates
-        latest = _latest_bloom_version(spark, bloom_dir)
+        prior = _newest_version(spark, bloom_dir, below=batch_id)
         old = None
-        if latest is not None:
-            old = spark.read.schema(_BLOOM_DDL).parquet(f"{bloom_dir}/b={latest}")
+        if prior is not None:
+            old = _read_version(spark, bloom_dir, prior, _BLOOM_DDL)
             batch = exact_dedup_against_bloom(
                 batch, old, textcol=textcol, idcol=idcol, verify=False
             )
@@ -401,18 +733,10 @@ def streaming_bloom_dedup(
         survivors.write.mode("append").parquet(output_dir)
         fresh = bloom_fingerprints(survivors, textcol, m_bits, k)
         merged = merge_blooms(old, fresh) if old is not None else fresh
-        rows = merged.collect()  # one row by construction
-        spark.createDataFrame(rows, _BLOOM_DDL).write.mode("overwrite").parquet(
-            f"{bloom_dir}/b={batch_id}"
-        )
-        _prune_bloom_versions(spark, bloom_dir, keep_from=latest)
+        _commit_version(merged, bloom_dir, batch_id)
+        _prune_versions(spark, bloom_dir, keep_from=prior)
 
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_gate(sdf, process, checkpoint_dir, available_now)
 
 
 def streaming_distinct_hll(
@@ -442,45 +766,23 @@ def streaming_distinct_hll(
     batching-sensitive WITHIN that bound (see the sketches module
     docstring) — consumers size against the bound, not byte identity.
 
-    Replay safety: the sketch table is VERSIONED
-    (``sketch_dir/b=<batch_id>``, committed-``_SUCCESS`` readers); a
-    batch merges the latest committed version STRICTLY OLDER than its
-    own id, so a retried batch rebuilds its version from the same
-    predecessor and overwrites only that version; the estimates
-    snapshot is a full overwrite, so downstream readers never see
-    partial state.
+    State is versioned at ``sketch_dir`` (module docstring): a retried
+    batch rebuilds its version from the same predecessor.
 
     Returns the started ``StreamingQuery``.
     """
     from pd_utils_spark.extensions.sketches import hll_rollup, hll_sketch_by
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = hll_sketch_by(batch_df, byvars_l, col, lgk=lgk, out="sk")
-        latest = _prior_version(spark, sketch_dir, batch_id)
-        if latest is not None:
-            old = _read_state(spark, sketch_dir, latest, fresh.schema)
-            fresh = hll_rollup(old.unionByName(fresh), byvars_l, "sk")
-        merged = _commit_state(fresh, sketch_dir, batch_id)
-        (
-            merged.select(
-                *byvars_l,
-                F.hll_sketch_estimate("sk").cast("bigint").alias("distinct_estimate"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sketch_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_gate(
+        sdf, output_dir, sketch_dir, checkpoint_dir, available_now,
+        sketch=lambda b: hll_sketch_by(b, byvars_l, col, lgk=lgk, out="sk"),
+        merge=lambda u: hll_rollup(u, byvars_l, "sk"),
+        snapshot=lambda s: s.select(
+            *byvars_l,
+            F.hll_sketch_estimate("sk").cast("bigint").alias("distinct_estimate"),
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_containment_dedup(
@@ -505,13 +807,12 @@ def streaming_containment_dedup(
     (the case :func:`streaming_minhash_dedup` structurally misses).
 
     **State is the PRECOMPUTED containment index, not the raw
-    corpus.** ``history_dir`` holds per-batch DELTA versions of the
-    three artifacts of
+    corpus.** ``history_dir`` holds delta versions (module docstring)
+    of the three artifacts of
     :func:`~pd_utils_spark.extensions.dedup.containment_index_frames`
-    — ``index/b=<batch_id>`` (inverted index), ``sets/b=<batch_id>``
-    (verify-side token sets), ``dfreq/b=<batch_id>`` (document-
-    frequency deltas; exact history df = sum of deltas) — plus
-    ``docs/b=<batch_id>`` (survivor ``(id, text)``, the external
+    — ``index`` (inverted index), ``sets`` (verify-side token sets),
+    ``dfreq`` (document-frequency deltas; exact history df = sum of
+    deltas) — plus ``docs`` (survivor ``(id, text)``, the external
     corpus artifact; the dedup itself never reads it back). Each
     batch PROBES the accumulated artifacts with
     :func:`~pd_utils_spark.extensions.dedup.dedup_containment_against_index`,
@@ -521,31 +822,24 @@ def streaming_containment_dedup(
     (plan-asserted in ``tests/test_streaming.py``). The one
     per-batch history-sized term left is summing the df deltas
     (O(distinct history tokens), a bounded-width table); at corpus
-    scale, compact the deltas periodically and store ``index``
-    bucketed by ``__tok__`` to make the probe join shuffle-free on
-    the history side. Containment still fundamentally needs full
-    shingle sets — there is no constant-size sketch with complete
-    recall — so total STORED state is corpus-token-sized; this
-    operator's job is keeping the per-batch COMPUTE off that term.
+    scale, compact the deltas periodically
+    (:func:`compact_containment_state`) and store ``index`` bucketed
+    by ``__tok__`` to make the probe join shuffle-free on the history
+    side. Containment still fundamentally needs full shingle sets —
+    there is no constant-size sketch with complete recall — so total
+    STORED state is corpus-token-sized; this operator's job is keeping
+    the per-batch COMPUTE off that term.
 
-    Replay safety: state versions are keyed by ``batch_id`` and
-    written BEFORE the output append, and a batch reads only
-    committed versions STRICTLY BELOW its own id — so a retried
-    batch ignores its own crashed half-write, re-derives identical
-    survivors (both dedup stages are deterministic), idempotently
-    overwrites its own version dirs, and re-appends to
-    ``output_dir``. ``output_dir`` is therefore AT-LEAST-ONCE
-    (the standard foreachBatch caveat — finish downstream with
-    ``exact_dedup`` on id when exactly-once matters) while the
-    artifact state is exactly-once; no crash window loses accepted
-    documents or admits a duplicate past the gate. Within the state
-    write, ``index`` commits LAST, so an index-committed version
-    implies its ``dfreq``/``sets`` committed too (readers enumerate
-    versions from ``index``). ``max_bucket`` trades exact recall for
-    flood protection on the history index (observe metric). One
-    qualifier: a RECAPPING compaction run between the crash and the
-    restart can shrink what the replayed batch probes, making the
-    replay at-least-once on admissions — see
+    Replay safety: both dedup stages are deterministic and a batch
+    reads only state strictly below its own id, so a retried batch
+    re-derives identical survivors and overwrites its own versions;
+    no crash window loses accepted documents or admits a duplicate
+    past the gate (``output_dir`` is at-least-once, the state
+    exactly-once). ``max_bucket`` trades exact recall for flood
+    protection on the history index (observe metric). One qualifier:
+    a RECAPPING compaction run between the crash and the restart can
+    shrink what the replayed batch probes, making the replay
+    at-least-once on admissions — see
     :func:`compact_containment_state`'s replay caveat.
 
     Returns the started ``StreamingQuery``.
@@ -555,239 +849,84 @@ def streaming_containment_dedup(
         containment_index_frames,
         dedup_containment_against_index,
     )
-    from pd_utils_spark.utils import release_registered
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = _spread_batch(batch_df)
-        try:
-            # ONE shingle pass per micro-batch (r12, guide §1.2): the
-            # within-batch dedup exposes its persisted (__id__,
-            # __tok__) frame, and both the history probe and the
-            # artifact build derive their token frames from it by
-            # (anti/semi) id joins instead of re-tokenizing the batch
-            # text — _containment_toks is a pure per-row function of
-            # (id, text), so the derived slices are row-identical to
-            # what each stage would have computed itself.
-            survivors, btoks, dropped = _dedup_containment_parts(
-                batch_df,
+        # ONE shingle pass per micro-batch (r12): the
+        # within-batch dedup exposes its persisted (__id__, __tok__)
+        # frame, and both the history probe and the artifact build
+        # derive their token frames from it by (anti/semi) id joins
+        # instead of re-tokenizing the batch text — _containment_toks
+        # is a pure per-row function of (id, text), so the derived
+        # slices are row-identical to what each stage would have
+        # computed itself.
+        survivors, btoks, dropped = _dedup_containment_parts(
+            batch_df,
+            textcol=textcol,
+            idcol=idcol,
+            threshold=threshold,
+            k=k,
+            max_bucket=max_bucket,
+        )
+        surv_toks = btoks.join(
+            dropped.select(F.col(idcol).alias("__id__")),
+            "__id__",
+            "left_anti",
+        )
+        state = _artifact_state(spark, history_dir, _CONTAINMENT, batch_id)
+        if state is not None:
+            index, sets, dfreq = state
+            # history side was flood-capped at build time (below) — a
+            # per-probe cap would re-window the full history index
+            # every batch
+            survivors = dedup_containment_against_index(
+                survivors,
+                index,
+                sets,
+                dfreq,
                 textcol=textcol,
                 idcol=idcol,
                 threshold=threshold,
                 k=k,
-                max_bucket=max_bucket,
+                max_bucket=None,
+                toks=surv_toks,
             )
-            surv_toks = btoks.join(
-                dropped.select(F.col(idcol).alias("__id__")),
+        survivors = survivors.localCheckpoint(eager=True)  # 5 writes
+        # flood cap applied per delta at build — write-once; a bucket
+        # spanning deltas is capped per delta, never dropping more
+        # than the r9 union-cap did
+        frames = containment_index_frames(
+            survivors, textcol=textcol, idcol=idcol, k=k,
+            max_bucket=max_bucket,
+            toks=surv_toks.join(
+                survivors.select(F.col(idcol).alias("__id__")),
                 "__id__",
-                "left_anti",
-            )
-            # committed versions strictly below this batch: a retried
-            # batch must not probe its own crashed half-state
-            state = _containment_state_frames(
-                spark, history_dir, below=batch_id
-            )
-            if state is not None:
-                index, sets, dfreq = state
-                # history side was flood-capped at build time (below)
-                # — a per-probe cap would re-window the full history
-                # index every batch
-                survivors = dedup_containment_against_index(
-                    survivors,
-                    index,
-                    sets,
-                    dfreq,
-                    textcol=textcol,
-                    idcol=idcol,
-                    threshold=threshold,
-                    k=k,
-                    max_bucket=None,
-                    toks=surv_toks,
-                )
-            survivors = survivors.localCheckpoint(eager=True)  # 5 writes
-            # state BEFORE output (see docstring); index commits LAST
-            # (flood cap applied per delta at build — write-once; a
-            # bucket spanning deltas is capped per delta, never
-            # dropping more than the r9 union-cap did)
-            frames = containment_index_frames(
-                survivors, textcol=textcol, idcol=idcol, k=k,
-                max_bucket=max_bucket,
-                toks=surv_toks.join(
-                    survivors.select(F.col(idcol).alias("__id__")),
-                    "__id__",
-                    "left_semi",
-                ),
-            )
-            # Independent writes overlap (guide §2.6; widened r11 -> r12
-            # from 2 to 3 concurrent artifacts): docs reads only the
-            # checkpointed survivors, dfreq only the shared htoks
-            # cache, and the sets write materializes the htoks+sets
-            # caches — all three are commit-order-independent, so one
-            # wave replaces three serialized job round-trips
-            # (concurrent materialization of a shared cached block is
-            # safe: the BlockManager computes it once under the block
-            # lock). The commit-order invariants hold: index still
-            # commits LAST among the state artifacts, and the output
-            # append starts only after every state write returned (a
-            # failed write raises via .result() and fails the batch
-            # before any output row lands). Callables are wrapped with
-            # inheritable_thread_target so the batch's JVM local
-            # properties (job group/description, scheduler pool)
-            # propagate to the pool threads — query.stop()/job-group
-            # cancellation reaches the in-flight writes and the
-            # pinned-thread JVM side is cleaned up deterministically.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            writes = [
-                lambda: frames["sets"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/sets/b={batch_id}"),
-                lambda: survivors.select(idcol, textcol)
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/docs/b={batch_id}"),
-                lambda: frames["dfreq"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/dfreq/b={batch_id}"),
-            ]
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in writes
-                ]
-                for f in futs:
-                    f.result()
-            frames["index"].write.mode("overwrite").parquet(
-                f"{history_dir}/index/b={batch_id}"
-            )
-            survivors.write.mode("append").parquet(output_dir)
-        finally:
-            # per-batch persists must not accumulate across a
-            # long-running stream
-            release_registered("containment_join_prefix")
-            release_registered("dedup_containment_against_index")
-            release_registered("containment_index_frames")
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _versioned_state_pieces(
-    spark, root: str, enum_sub: str, below: int
-) -> list[str]:
-    """Version pieces of a delta-versioned artifact state dir,
-    strictly below batch id ``below``: the newest committed COMPACTED
-    generation ``c=<id>`` plus every committed delta ``b=<v>`` with
-    ``c_id < v < below``. Versions are enumerated from ``enum_sub``
-    (the subdir the writer commits LAST, so a version listed there
-    implies its siblings committed)."""
-    idx_dir = f"{root}/{enum_sub}"
-    cs = [
-        v
-        for v in _bloom_versions(spark, idx_dir, prefix="c=")
-        if v < below
-    ]
-    c0 = max(cs) if cs else None
-    bs = [
-        v
-        for v in _bloom_versions(spark, idx_dir)
-        if v < below and (c0 is None or v > c0)
-    ]
-    return ([f"c={c0}"] if c0 is not None else []) + [f"b={v}" for v in bs]
-
-
-def _prune_state_pieces(
-    spark, root: str, subs: tuple, deltas: list[int], old_c: int | None
-) -> None:
-    """Best-effort deletion of state pieces superseded by a new
-    compacted generation (the folded ``b=`` deltas plus the previous
-    ``c=`` generation) across every artifact subdir. Cosmetic —
-    readers already prefer the newest committed compaction."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    stale = [f"b={v}" for v in deltas] + (
-        [f"c={old_c}"] if old_c is not None else []
-    )
-    for sub in subs:
-        d = f"{root}/{sub}"
-        fs = jvm.org.apache.hadoop.fs.Path(d).getFileSystem(
-            jsc.hadoopConfiguration()
+                "left_semi",
+            ),
         )
-        for name in stale:
-            try:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{d}/{name}"), True)
-            except Exception:
-                pass  # cosmetic; never fail compaction for it
+        # sets, docs and dfreq overlap: docs reads only
+        # the checkpointed survivors, dfreq only the shared htoks
+        # cache, and the sets write materializes the htoks+sets
+        # caches (concurrent materialization of a shared cached block
+        # is safe: the BlockManager computes it once under the block
+        # lock)
+        _commit_artifacts(history_dir, batch_id, {
+            "sets": frames["sets"],
+            "docs": survivors.select(idcol, textcol),
+            "dfreq": frames["dfreq"],
+            "index": frames["index"],
+        })
+        survivors.write.mode("append").parquet(output_dir)
 
-
-def _containment_state_frames(spark, history_dir: str, below: int):
-    """Accumulated containment-gate artifacts strictly below batch id
-    ``below`` (see :func:`_versioned_state_pieces`). Returns
-    ``(index, sets, dfreq)`` frames or ``None`` when no committed
-    state qualifies. ``dfreq`` is summed across the selected pieces
-    (a compacted generation's table is already a sum, so re-summing
-    with newer deltas stays exact)."""
-    pieces = _versioned_state_pieces(spark, history_dir, "index", below)
-    if not pieces:
-        return None
-    index = spark.read.parquet(*[f"{history_dir}/index/{p}" for p in pieces])
-    sets = spark.read.parquet(*[f"{history_dir}/sets/{p}" for p in pieces])
-    dfreq = (
-        spark.read.parquet(*[f"{history_dir}/dfreq/{p}" for p in pieces])
-        .groupBy("__tok__")
-        .agg(F.sum("__df__").alias("__df__"))
+    return _start_gate(
+        sdf, process, checkpoint_dir, available_now,
+        release=(
+            "containment_join_prefix",
+            "dedup_containment_against_index",
+            "containment_index_frames",
+        ),
     )
-    return index, sets, dfreq
-
-
-def _stamped_max_bucket(frame: DataFrame, col: str) -> int | None:
-    """The flood cap the artifact BUILDER applied, read back from the
-    parquet-persistent column metadata the builders stamp (see
-    ``minhash_history_frames`` / ``containment_index_frames``).
-    ``None`` for uncapped or externally-built artifacts."""
-    try:
-        mb = (frame.schema[col].metadata or {}).get("max_bucket")
-        return int(mb) if mb is not None else None
-    except Exception:  # pragma: no cover — renamed/absent column
-        return None
-
-
-def _stamped_max_bucket_pieces(
-    spark, piece_dirs: list[str], col: str
-) -> int | None:
-    """Resolve the build-time flood cap across a FOLD's state pieces
-    by reading each piece's own parquet footer (ADVICE r11: a merged
-    multi-path read surfaces whichever piece's schema Spark samples,
-    so a stream restarted with a different ``max_bucket`` across
-    deltas would be recapped — or not — non-deterministically).
-    Explicit policy: the MINIMUM stamp across stamped pieces (the
-    tightest flood bound any delta was built under — recapping is a
-    protective bound, so the conservative merge is the smallest cap);
-    ``None`` when NO piece is stamped (a fully-uncapped build folds
-    losslessly). Pieces written uncapped alongside capped ones still
-    fold under the capped pieces' minimum — the fold's job is
-    re-bounding cross-delta growth, which an uncapped delta does not
-    exempt its neighbors from."""
-    stamps = []
-    for d in piece_dirs:
-        mb = _stamped_max_bucket(spark.read.parquet(d), col)
-        if mb is not None:
-            stamps.append(mb)
-    return min(stamps) if stamps else None
-
-
-def _validate_recap(max_bucket) -> None:
-    """Fail loudly on cap values that would wipe the folded state
-    (``_cap_buckets`` drops EVERY bucket at <= 0); ``None`` means
-    "use the stamped build-time cap" and ``recap=False`` on the
-    compactors is the explicit no-recap override."""
-    if max_bucket is not None and int(max_bucket) <= 0:
-        raise ValueError(f"max_bucket must be >= 1: {max_bucket}")
 
 
 def compact_containment_state(
@@ -814,13 +953,10 @@ def compact_containment_state(
     the newest delta out keeps every state the replayed batch can
     see complete. Costs one extra delta dir per read.
 
-    Crash-safe by construction: the compacted generation is written
-    to NEW paths (``index`` last, same commit-order invariant as the
-    writer), readers prefer the newest committed ``c=`` and ignore
-    deltas at or below it, and pruning the superseded pieces is
-    best-effort cosmetic cleanup — a crash at any point leaves a
-    state the reader resolves identically. Returns the compacted
-    generation id, or None when there is nothing to fold.
+    Crash-safe by construction (module docstring): a crash at any
+    point leaves a state the reader resolves identically. Returns the
+    compacted generation id, or the existing one (``None`` when there
+    is none) when there is nothing to fold.
 
     **The build-time flood cap is RE-APPLIED to the folded index**:
     per-delta caps bound each delta independently, so a hot ``__tok__``
@@ -849,46 +985,9 @@ def compact_containment_state(
     may see differently. Run compaction only after the newest delta's
     batch is confirmed committed in the streaming checkpoint when
     exact replay identity matters, or pass ``recap=False``."""
-    _validate_recap(max_bucket)
-    idx_dir = f"{history_dir}/index"
-    cs = _bloom_versions(spark, idx_dir, prefix="c=")
-    c0 = max(cs) if cs else None
-    bs = [v for v in _bloom_versions(spark, idx_dir) if c0 is None or v > c0]
-    # leave the newest delta uncompacted: its batch may replay and
-    # must still resolve complete state strictly below its own id
-    fold = sorted(bs)[:-1]
-    if not fold:
-        return c0  # nothing foldable beyond the last compaction
-    top = max(fold)
-    index, sets, dfreq = _containment_state_frames(
-        spark, history_dir, below=top + 1
+    return _compact(
+        spark, history_dir, _CONTAINMENT, prune, max_bucket, recap
     )
-    # re-bound buckets that grew past the build-time cap across deltas
-    # (see docstring); no-op for uncapped builds or recap=False
-    mb = max_bucket
-    if mb is None and recap:
-        pieces = _versioned_state_pieces(
-            spark, history_dir, "index", below=top + 1
-        )
-        mb = _stamped_max_bucket_pieces(
-            spark, [f"{history_dir}/index/{p}" for p in pieces], "__tok__"
-        )
-    if mb is not None and recap:
-        from pd_utils_spark.extensions.dedup import _cap_buckets
-
-        index = _cap_buckets(
-            index, ["__tok__"], mb, "containment_against_bucket"
-        )
-    # write to the NEW c=<top> generation; index commits LAST so an
-    # index-committed generation implies dfreq/sets committed
-    dfreq.write.mode("overwrite").parquet(f"{history_dir}/dfreq/c={top}")
-    sets.write.mode("overwrite").parquet(f"{history_dir}/sets/c={top}")
-    index.write.mode("overwrite").parquet(f"{history_dir}/index/c={top}")
-    if prune:
-        _prune_state_pieces(
-            spark, history_dir, ("index", "sets", "dfreq"), fold, c0
-        )
-    return top
 
 
 def streaming_sample_quantiles(
@@ -922,11 +1021,8 @@ def streaming_sample_quantiles(
     BATCH-BOUNDARY-INSENSITIVE (any split of the same rows into
     micro-batches yields bit-identical state — merge is
     sort-truncate over row-keyed hashes) and equals the batch twin
-    built over the full history in one pass. Replay safety: versioned
-    state (``sample_dir/b=<batch>``, committed-``_SUCCESS`` readers);
-    a batch merges the latest committed version strictly older than
-    its own id, so a retried batch rebuilds its version from the same
-    predecessor and overwrites it.
+    built over the full history in one pass. State is versioned at
+    ``sample_dir`` (module docstring).
 
     Returns the started ``StreamingQuery``.
     """
@@ -938,40 +1034,23 @@ def streaming_sample_quantiles(
 
     byvars_l = to_list(byvars)
     q_names = [f"q{int(round(q * 100))}" for q in qs]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    return _summary_gate(
+        sdf, output_dir, sample_dir, checkpoint_dir, available_now,
         # single-file micro-batches otherwise hash/struct every batch
         # row on ONE core (see _spread_batch; result is partitioning-
         # independent — deterministic sort-truncate)
-        batch_df = _spread_batch(batch_df)
-        fresh = sample_sketch_by(
-            batch_df, byvars_l, col, id_cols=id_cols, k=k, out="sk"
-        )
-        latest = _prior_version(spark, sample_dir, batch_id)
-        if latest is not None:
-            old = _read_state(spark, sample_dir, latest, fresh.schema)
-            fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = _commit_state(fresh, sample_dir, batch_id)
-        est = quantile_estimate(merged, "sk", list(qs), drop_sketch=False)
-        (
-            est.select(
-                *byvars_l,
-                *q_names,
-                F.size("sk").cast("bigint").alias("n_sampled"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sample_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+        sketch=lambda b: sample_sketch_by(
+            _spread_batch(b), byvars_l, col, id_cols=id_cols, k=k, out="sk"
+        ),
+        merge=lambda u: bottomk_rollup(u, byvars_l, "sk", k=k),
+        snapshot=lambda s: quantile_estimate(
+            s, "sk", list(qs), drop_sketch=False
+        ).select(
+            *byvars_l,
+            *q_names,
+            F.size("sk").cast("bigint").alias("n_sampled"),
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_topk(
@@ -999,14 +1078,11 @@ def streaming_topk(
     (true heavy hitters never lost, counts never undercount, bounded
     overestimate).
 
-    Replay safety as in the HLL/bottom-k rows: the reader takes the
-    latest committed version STRICTLY OLDER than the current batch id,
-    so a retry rebuilds its own version from the same predecessor and
-    overwrites it bit-identically. Here that rule also guards the
-    counts: frequent-items COMBINE IS NOT IDEMPOTENT (re-merging the
-    same batch double-counts, where HLL union and bottom-k
-    distinct-merge are no-ops). Versioned dirs and committed-``_SUCCESS``
-    readers as in :func:`streaming_bloom_dedup`.
+    State is versioned at ``sketch_dir`` (module docstring). Here the
+    strictly-below read also guards the counts: frequent-items
+    COMBINE IS NOT IDEMPOTENT (re-merging the same batch
+    double-counts, where HLL union and bottom-k distinct-merge are
+    no-ops).
 
     Returns the started ``StreamingQuery``.
     """
@@ -1017,33 +1093,14 @@ def streaming_topk(
     )
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = topk_sketch_by(
-            batch_df, byvars_l, col, max_items=max_items, out="sk"
-        )
-        latest = _prior_version(spark, sketch_dir, batch_id)
-        if latest is not None:
-            old = _read_state(spark, sketch_dir, latest, fresh.schema)
-            fresh = topk_rollup(
-                old.unionByName(fresh), byvars_l, "sk", max_items=max_items
-            )
-        merged = _commit_state(fresh, sketch_dir, batch_id)
-        (
-            topk_estimate(merged, "sk", k=k)
-            .withColumn("as_of_batch", F.lit(batch_id).cast("bigint"))
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sketch_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _summary_gate(
+        sdf, output_dir, sketch_dir, checkpoint_dir, available_now,
+        sketch=lambda b: topk_sketch_by(
+            b, byvars_l, col, max_items=max_items, out="sk"
+        ),
+        merge=lambda u: topk_rollup(u, byvars_l, "sk", max_items=max_items),
+        snapshot=lambda s: topk_estimate(s, "sk", k=k),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_weighted_sample(
@@ -1073,9 +1130,8 @@ def streaming_weighted_sample(
     Same two deterministic-merge properties as
     :func:`streaming_sample_quantiles`, inherited from the same
     sort-truncate: batch-boundary-INSENSITIVE state bit-for-bit, and
-    equality with the one-pass batch twin; replay-safe as there: a
-    retried batch rebuilds its version from the version strictly
-    older than its own id.
+    equality with the one-pass batch twin; state is versioned at
+    ``sample_dir`` (module docstring).
     While a group's (positive-weight) rows fit in ``k`` the sample IS
     the group and the snapshot aggregates are exact.
 
@@ -1087,154 +1143,28 @@ def streaming_weighted_sample(
     )
 
     byvars_l = to_list(byvars)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    return _summary_gate(
+        sdf, output_dir, sample_dir, checkpoint_dir, available_now,
         # see _spread_batch — same single-file micro-batch rationale as
         # streaming_sample_quantiles; A-ES keys are row-deterministic
-        batch_df = _spread_batch(batch_df)
-        fresh = weighted_sample_sketch_by(
-            batch_df, byvars_l, col, weight_col, id_cols=id_cols, k=k,
-            out="sk",
-        )
-        latest = _prior_version(spark, sample_dir, batch_id)
-        if latest is not None:
-            old = _read_state(spark, sample_dir, latest, fresh.schema)
-            fresh = bottomk_rollup(old.unionByName(fresh), byvars_l, "sk", k=k)
-        merged = _commit_state(fresh, sample_dir, batch_id)
-        (
-            merged.select(
-                *byvars_l,
-                F.size("sk").cast("bigint").alias("n_sampled"),
-                F.round(
-                    F.aggregate(
-                        F.col("sk"),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["v"],
-                    ),
-                    6,
-                ).alias("sum_sampled"),
-                F.lit(batch_id).cast("bigint").alias("as_of_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(output_dir)
-        )
-        _prune_bloom_versions(spark, sample_dir, keep_from=latest)
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+        sketch=lambda b: weighted_sample_sketch_by(
+            _spread_batch(b), byvars_l, col, weight_col, id_cols=id_cols,
+            k=k, out="sk",
+        ),
+        merge=lambda u: bottomk_rollup(u, byvars_l, "sk", k=k),
+        snapshot=lambda s: s.select(
+            *byvars_l,
+            F.size("sk").cast("bigint").alias("n_sampled"),
+            F.round(
+                F.aggregate(
+                    F.col("sk"),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["v"],
+                ),
+                6,
+            ).alias("sum_sampled"),
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _prior_version(spark, state_dir: str, batch_id: int) -> int | None:
-    """Newest committed state version strictly below ``batch_id``. A
-    replayed batch whose own version was already committed must not
-    read it: :func:`_commit_state` overwrites that very directory."""
-    versions = [v for v in _bloom_versions(spark, state_dir) if v < batch_id]
-    return versions[-1] if versions else None
-
-
-def _read_state(spark, state_dir: str, version: int, schema) -> DataFrame:
-    """State version ``b=<version>`` of ``state_dir``, read with the
-    schema its writer had (the schema of the frame the read is unioned
-    with), so the read runs no schema-inference job."""
-    return spark.read.schema(schema).parquet(f"{state_dir}/b={version}")
-
-
-def _commit_state(frame: DataFrame, state_dir: str, batch_id: int) -> DataFrame:
-    """Write ``frame`` as state version ``b=<batch_id>`` and return that
-    committed version, read back with ``frame``'s schema. The caller's
-    second consumer (the snapshot write) then reads the same files the
-    next batch will read: ``frame`` is computed once, with no
-    checkpoint job and no persisted RDD left behind. ``frame`` must not
-    read ``b=<batch_id>`` itself (take the prior version from
-    :func:`_prior_version`): the overwrite deletes it first."""
-    frame.write.mode("overwrite").parquet(f"{state_dir}/b={batch_id}")
-    return _read_state(frame.sparkSession, state_dir, batch_id, frame.schema)
-
-
-def read_latest_state(spark, state_dir: str):
-    """Public batch-side reader for any versioned streaming-state dir
-    this module writes (``streaming_bloom_dedup`` filters,
-    ``streaming_distinct_hll`` sketches, ``streaming_sample_quantiles``
-    samples, ``streaming_topk`` sketches): returns ``(version,
-    DataFrame)`` for the latest COMMITTED version — a version counts
-    only once its ``_SUCCESS`` marker exists, so a reader racing a
-    crash mid-write never sees partial state — or ``(None, None)``
-    when no committed version exists yet. This is the handoff point
-    between the continuously-running stream and downstream batch
-    jobs: join yesterday's Bloom filter into an ingest gate, roll a
-    week of per-day sample sketches up with ``bottomk_rollup``,
-    estimate from the live HLL table — all without touching the
-    stream's checkpoint."""
-    v = _latest_bloom_version(spark, state_dir)
-    if v is None:
-        return None, None
-    return v, spark.read.parquet(f"{state_dir}/b={v}")
-
-
-def _bloom_versions(
-    spark, bloom_dir: str, committed_only: bool = True, prefix: str = "b="
-) -> list[int]:
-    """Filter versions under a :func:`streaming_bloom_dedup` state
-    dir. ``committed_only`` keeps only versions whose ``_SUCCESS``
-    marker exists — a version directory APPEARS as soon as the writer
-    mkdirs it, before any parquet file commits, so a crash mid-write
-    (or a concurrent reader racing the write) must never mistake the
-    partial directory for state. ``prefix`` selects the version
-    namespace (``b=`` per-batch versions; ``c=`` the containment
-    gate's compacted generations)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(bloom_dir)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    out = []
-    n = len(prefix)
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and name[n:].isdigit():
-            if committed_only and not fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{bloom_dir}/{name}/_SUCCESS"
-                )
-            ):
-                continue
-            out.append(int(name[n:]))
-    return sorted(out)
-
-
-def _latest_bloom_version(spark, bloom_dir: str) -> int | None:
-    """Latest COMMITTED filter version under a
-    :func:`streaming_bloom_dedup` state dir (also the reader API for
-    downstream batch jobs: ``spark.read.parquet(f"{d}/b={v}")``)."""
-    versions = _bloom_versions(spark, bloom_dir)
-    return versions[-1] if versions else None
-
-
-def _prune_bloom_versions(spark, bloom_dir: str, keep_from: int | None) -> None:
-    """Best-effort removal of filter versions OLDER than ``keep_from``
-    (the previous version is kept so a crash mid-write of the current
-    one never strands the stream without state). Prunes partial
-    (uncommitted) stale versions too."""
-    if keep_from is None:
-        return
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(bloom_dir)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
-    for v in _bloom_versions(spark, bloom_dir, committed_only=False):
-        if v < keep_from:
-            try:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{bloom_dir}/b={v}"), True
-                )
-            except Exception:
-                pass  # pruning is cosmetic; never fail the batch for it
 
 
 def streaming_sessionize(
@@ -1350,29 +1280,23 @@ def streaming_minhash_dedup(
 
     **State is the PRECOMPUTED band-key index, not the raw corpus**
     (same round-9 rebuild as :func:`streaming_containment_dedup`):
-    ``history_dir`` holds per-batch DELTA versions of the two
-    artifacts of
+    ``history_dir`` holds delta versions (module docstring) of the
+    two artifacts of
     :func:`~pd_utils_spark.extensions.dedup.minhash_history_frames` —
-    ``keys/b=<batch_id>`` (banded LSH keys) and
-    ``shingles/b=<batch_id>`` (Jaccard verify side) — plus
-    ``docs/b=<batch_id>`` (survivor ``(id, text)``, external corpus
+    ``keys`` (banded LSH keys) and ``shingles`` (Jaccard verify side)
+    — plus ``docs`` (survivor ``(id, text)``, external corpus
     artifact only). Each batch PROBES the accumulated artifacts with
     :func:`~pd_utils_spark.extensions.dedup.dedup_minhash_against_index`,
     so the history text is never re-shingled / re-minhashed /
     re-banded per batch; at scale, store ``keys`` bucketed on
     ``(band, band_key)`` and the candidate join is shuffle-free on
-    the history side. ``compact_minhash_state`` folds deltas into a
-    ``c=<top>`` generation (stream stopped).
+    the history side. :func:`compact_minhash_state` folds deltas into
+    a ``c=<top>`` generation (stream stopped).
 
-    Replay safety (same crash algebra as the containment gate): state
-    versions are keyed by ``batch_id``, written BEFORE the output
-    append with ``keys`` committed LAST, and a batch reads only
-    committed versions STRICTLY BELOW its own id — a retried batch
-    ignores its crashed half-write, re-derives identical survivors,
-    idempotently overwrites its own version dirs, and re-appends.
-    ``output_dir`` is therefore AT-LEAST-ONCE (finish downstream with
-    ``exact_dedup`` on id when exactly-once matters) while the
-    artifact state is exactly-once.
+    Replay safety is the containment gate's: a retried batch
+    re-derives identical survivors from the state strictly below its
+    id, overwrites its own versions and re-appends; ``output_dir`` is
+    at-least-once, the artifact state exactly-once.
 
     Returns the started ``StreamingQuery``.
     """
@@ -1381,111 +1305,66 @@ def streaming_minhash_dedup(
         dedup_minhash_against_index,
         minhash_history_frames,
     )
-    from pd_utils_spark.utils import release_registered
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = _spread_batch(batch_df)
-        try:
-            # ONE tokenize pass per micro-batch (r12, guide §1.2):
-            # the within-batch dedup exposes its persisted shingle
-            # frame, and both the history probe and the artifact
-            # build derive their shingle frames from it by (anti/
-            # semi) id joins instead of re-shingling the batch text —
-            # shingle_sets is a pure per-row function of (id, text),
-            # so the derived slices are row-identical to what each
-            # stage would have computed itself.
-            survivors, bsh, losers = _dedup_minhash_lsh_parts(
-                batch_df, textcol, idcol, k, num_hashes, bands, threshold,
-                max_bucket,
+        # ONE tokenize pass per micro-batch (r12): the
+        # within-batch dedup exposes its persisted shingle frame, and
+        # both the history probe and the artifact build derive their
+        # shingle frames from it by (anti/semi) id joins instead of
+        # re-shingling the batch text — shingle_sets is a pure per-row
+        # function of (id, text), so the derived slices are
+        # row-identical to what each stage would have computed itself.
+        survivors, bsh, losers = _dedup_minhash_lsh_parts(
+            batch_df, textcol, idcol, k, num_hashes, bands, threshold,
+            max_bucket,
+        )
+        surv_sh = bsh.join(losers, idcol, "left_anti")
+        state = _artifact_state(spark, history_dir, _MINHASH, batch_id)
+        if state is not None:
+            keys, shingles = state
+            survivors = dedup_minhash_against_index(
+                survivors,
+                keys,
+                shingles,
+                textcol=textcol,
+                idcol=idcol,
+                k=k,
+                num_hashes=num_hashes,
+                bands=bands,
+                threshold=threshold,
+                max_bucket=max_bucket,
+                batch_shingles=surv_sh,
             )
-            surv_sh = bsh.join(losers, idcol, "left_anti")
-            state = _minhash_state_frames(spark, history_dir, below=batch_id)
-            if state is not None:
-                keys, shingles = state
-                survivors = dedup_minhash_against_index(
-                    survivors,
-                    keys,
-                    shingles,
-                    textcol=textcol,
-                    idcol=idcol,
-                    k=k,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    threshold=threshold,
-                    max_bucket=max_bucket,
-                    batch_shingles=surv_sh,
-                )
-            survivors = survivors.localCheckpoint(eager=True)  # 4 writes
-            # band-bucket flood cap applied per delta at build time
-            # (write-once); the probe caps only its batch side
-            frames = minhash_history_frames(
-                survivors, textcol=textcol, idcol=idcol, k=k,
-                num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
-                shingles=surv_sh.join(
-                    survivors.select(idcol), idcol, "left_semi"
-                ),
-            )
-            # Independent writes overlap (guide §2.6, r11) — same
-            # schedule as the containment gate: docs reads only the
-            # checkpointed survivors, so it runs concurrently with the
-            # shingles write (which materializes the shared shingle
-            # cache the keys build then reads); keys still commits
-            # LAST among the state artifacts and the output append
-            # starts only after every state write returned. Callables
-            # are wrapped with inheritable_thread_target (r12) so job-
-            # group cancellation reaches the in-flight writes and the
-            # pinned-thread JVM side is cleaned up deterministically.
-            from concurrent.futures import ThreadPoolExecutor
+        survivors = survivors.localCheckpoint(eager=True)  # 4 writes
+        # band-bucket flood cap applied per delta at build time
+        # (write-once); the probe caps only its batch side
+        frames = minhash_history_frames(
+            survivors, textcol=textcol, idcol=idcol, k=k,
+            num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
+            shingles=surv_sh.join(
+                survivors.select(idcol), idcol, "left_semi"
+            ),
+        )
+        # docs reads only the checkpointed survivors, so it overlaps
+        # the shingles write (which materializes the shared shingle
+        # cache the keys build then reads)
+        _commit_artifacts(history_dir, batch_id, {
+            "shingles": frames["shingles"],
+            "docs": survivors.select(idcol, textcol),
+            "keys": frames["keys"],
+        })
+        survivors.write.mode("append").parquet(output_dir)
 
-            from pyspark import inheritable_thread_target
-
-            writes = [
-                lambda: frames["shingles"]
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/shingles/b={batch_id}"),
-                lambda: survivors.select(idcol, textcol)
-                .write.mode("overwrite")
-                .parquet(f"{history_dir}/docs/b={batch_id}"),
-            ]
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in writes
-                ]
-                for f in futs:
-                    f.result()
-            frames["keys"].write.mode("overwrite").parquet(
-                f"{history_dir}/keys/b={batch_id}"
-            )
-            survivors.write.mode("append").parquet(output_dir)
-        finally:
-            # per-batch persists must not accumulate across the stream
-            release_registered("dedup_minhash_lsh")
-            release_registered("minhash_history_frames")
-            release_registered("dedup_minhash_against_index")
-
-    writer = sdf.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_gate(
+        sdf, process, checkpoint_dir, available_now,
+        release=(
+            "dedup_minhash_lsh",
+            "minhash_history_frames",
+            "dedup_minhash_against_index",
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _minhash_state_frames(spark, history_dir: str, below: int):
-    """Accumulated MinHash-gate artifacts strictly below batch id
-    ``below`` (newest committed ``c=`` generation + newer ``b=``
-    deltas, enumerated from ``keys``). Returns ``(keys, shingles)``
-    or ``None``."""
-    pieces = _versioned_state_pieces(spark, history_dir, "keys", below)
-    if not pieces:
-        return None
-    keys = spark.read.parquet(*[f"{history_dir}/keys/{p}" for p in pieces])
-    shingles = spark.read.parquet(
-        *[f"{history_dir}/shingles/{p}" for p in pieces]
-    )
-    return keys, shingles
 
 
 def compact_minhash_state(
@@ -1494,14 +1373,10 @@ def compact_minhash_state(
 ):
     """Fold a :func:`streaming_minhash_dedup` state dir's delta
     versions into one compacted ``c=<top>`` generation — the MinHash
-    sibling of :func:`compact_containment_state` (same crash-safety:
-    new paths only, ``keys`` commits last, readers prefer the newest
-    committed compaction, pruning is cosmetic; run with the stream
-    stopped; **the newest delta is never folded** — its batch may
-    replay after a crash and reads strictly below its own id, so a
-    compaction covering it would leave that replay probing empty
-    history). Returns the compacted generation id, or the existing
-    one when there is nothing to fold.
+    sibling of :func:`compact_containment_state`, with the same
+    crash safety, the same rule that **the newest delta is never
+    folded**, and the same return value (run with the stream
+    stopped).
 
     Like its containment sibling, folding RE-APPLIES the build-time
     flood cap to the folded ``keys`` (a hot ``(band, band_key)``
@@ -1514,41 +1389,7 @@ def compact_minhash_state(
     caveat documented on :func:`compact_containment_state` applies
     verbatim: recapping makes post-compaction replays at-least-once
     on admissions."""
-    _validate_recap(max_bucket)
-    idx_dir = f"{history_dir}/keys"
-    cs = _bloom_versions(spark, idx_dir, prefix="c=")
-    c0 = max(cs) if cs else None
-    bs = [v for v in _bloom_versions(spark, idx_dir) if c0 is None or v > c0]
-    fold = sorted(bs)[:-1]  # replay safety: keep the newest delta
-    if not fold:
-        return c0
-    top = max(fold)
-    keys, shingles = _minhash_state_frames(spark, history_dir, below=top + 1)
-    # re-bound band buckets that grew past the build-time cap across
-    # deltas (see docstring); no-op for uncapped builds or recap=False
-    mb = max_bucket
-    if mb is None and recap:
-        pieces = _versioned_state_pieces(
-            spark, history_dir, "keys", below=top + 1
-        )
-        mb = _stamped_max_bucket_pieces(
-            spark, [f"{history_dir}/keys/{p}" for p in pieces], "band_key"
-        )
-    if mb is not None and recap:
-        from pd_utils_spark.extensions.dedup import _cap_buckets
-
-        keys = _cap_buckets(
-            keys, ["band", "band_key"], mb, "lsh_bucket_cap"
-        )
-    shingles.write.mode("overwrite").parquet(
-        f"{history_dir}/shingles/c={top}"
-    )
-    keys.write.mode("overwrite").parquet(f"{history_dir}/keys/c={top}")
-    if prune:
-        _prune_state_pieces(
-            spark, history_dir, ("keys", "shingles"), fold, c0
-        )
-    return top
+    return _compact(spark, history_dir, _MINHASH, prune, max_bucket, recap)
 
 
 def stateful_running_agg(

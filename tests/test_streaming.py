@@ -10,6 +10,7 @@ import tempfile
 
 import pandas as pd
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -20,6 +21,7 @@ from pyspark.sql.types import (
 )
 
 from pd_utils_spark import streaming as W
+from pd_utils_spark.utils import release_registered
 
 EVENTS = pd.DataFrame(
     {
@@ -619,6 +621,45 @@ class TestStreamingGreedyBandDedup:
                 q.stop()
         finally:
             shutil.rmtree(base, ignore_errors=True)
+
+
+    def test_failed_batch_releases_its_persisted_frames(self, spark, tmp_path):
+        """A batch that fails after the greedy filter persisted its
+        per-pass frames still releases them. The claims table here
+        holds a corrupt parquet file, so the batch fails in the job
+        that computes the filter."""
+        from pyspark.sql.types import LongType
+
+        from pd_utils_spark.utils import _PERSIST_REGISTRY
+
+        release_registered("greedy_band_filter")  # earlier batch callers
+        src, hist = tmp_path / "src", tmp_path / "hist"
+        src.mkdir()
+        hist.mkdir()
+        (hist / "part-00000.parquet").write_bytes(b"not a parquet file")
+        (src / "b0.json").write_text(
+            "\n".join(
+                json.dumps({"doc_id": i, "text": t})
+                for i, t in [
+                    (1, "the quick brown fox jumps over the lazy dog"),
+                    (2, "the quick brown fox jumps over the lazy dog"),
+                ]
+            )
+        )
+        schema = StructType(
+            [StructField("doc_id", LongType()), StructField("text", StringType())]
+        )
+        stream = spark.readStream.format("json").schema(schema).load(str(src))
+        q = W.streaming_greedy_band_dedup(
+            stream, str(tmp_path / "out"), str(hist), str(tmp_path / "ckpt"),
+            available_now=True,
+        )
+        try:
+            with pytest.raises(StreamingQueryException):
+                q.awaitTermination(120)
+        finally:
+            q.stop()
+        assert "greedy_band_filter" not in _PERSIST_REGISTRY
 
 
 class TestStreamingMinhashDedup:
@@ -1382,7 +1423,7 @@ class TestStreamingBloomDedup:
                     time.sleep(1)
                 assert ids() == [1, 3, 11]  # 10 dropped via the filter
                 from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
+                    _newest_version,
                 )
 
                 # poll until batch 2's filter version COMMITS (the
@@ -1390,7 +1431,7 @@ class TestStreamingBloomDedup:
                 # reaching 3 does not imply the write finished)
                 v = None
                 while time.time() < deadline and (v is None or v < 1):
-                    v = _latest_bloom_version(spark, bld)
+                    v = _newest_version(spark, bld)
                     if v is None or v < 1:
                         time.sleep(1)
                 assert v is not None and v >= 1
@@ -1510,10 +1551,10 @@ class TestStreamingDistinctHll:
                     time.sleep(1)
                 assert snap() == {"g": (3, 1), "h": (2, 1)}
                 from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
+                    _newest_version,
                 )
 
-                v = _latest_bloom_version(spark, skd)
+                v = _newest_version(spark, skd)
                 assert v == 1
                 state = spark.read.parquet(f"{skd}/b={v}")
                 assert state.count() == 2  # one sketch row per group
@@ -1605,10 +1646,10 @@ class TestStreamingSampleQuantiles:
                     sample_sketch_by,
                 )
                 from pd_utils_spark.streaming.stateful import (
-                    _latest_bloom_version,
+                    _newest_version,
                 )
 
-                v = _latest_bloom_version(spark, smd)
+                v = _newest_version(spark, smd)
                 assert v == 1
                 state = {
                     r.event_type: [tuple(e) for e in r.sk]
@@ -1903,6 +1944,223 @@ class TestStateGateReplay:
         finally:
             shutil.rmtree(base, ignore_errors=True)
 
+    def test_replayed_bloom_batch_rewrites_its_filter(self, spark):
+        """The Bloom gate appends its survivors before it writes its
+        filter version, so its output is a log, not a snapshot: the
+        replay must rebuild ``b=1`` from ``b=0`` and re-append batch
+        1's survivors (at-least-once output). Reading its own ``b=1``
+        instead would drop every survivor as a member."""
+        import os
+        import time
+
+        from pyspark.sql.types import LongType
+
+        base = tempfile.mkdtemp(prefix="replay_bloom_")
+        src, outd, bld, ckpt = (
+            f"{base}/{d}" for d in ("src", "out", "bloom", "ckpt")
+        )
+        os.makedirs(src)
+        try:
+            schema = StructType(
+                [StructField("doc_id", LongType()), StructField("text", StringType())]
+            )
+            batches = [
+                [
+                    {"doc_id": 1, "text": "alpha beta gamma"},
+                    {"doc_id": 2, "text": "alpha  beta gamma"},
+                    {"doc_id": 3, "text": "unique one"},
+                ],
+                [
+                    {"doc_id": 4, "text": "Alpha beta gamma"},  # member
+                    {"doc_id": 5, "text": "fresh second batch"},
+                    {"doc_id": 6, "text": "another new doc"},
+                ],
+            ]
+            now = time.time()
+            for b, rows in enumerate(batches):
+                path = f"{src}/b{b}.json"
+                with open(path, "w") as f:
+                    f.write("\n".join(json.dumps(r) for r in rows))
+                # the file source takes files oldest first
+                os.utime(path, (now - 100 + b, now - 100 + b))
+
+            def run():
+                stream = (
+                    spark.readStream.format("json")
+                    .schema(schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .load(src)
+                )
+                q = W.streaming_bloom_dedup(
+                    stream, outd, bld, ckpt, m_bits=4096, k=3,
+                    available_now=True,
+                )
+                try:
+                    q.awaitTermination(120)
+                finally:
+                    q.stop()
+                assert q.exception() is None
+                ids = sorted(r.doc_id for r in spark.read.parquet(outd).collect())
+                bloom = spark.read.parquet(f"{bld}/b=1").collect()
+                return ids, [tuple(r) for r in bloom]
+
+            first_ids, first_bloom = run()
+            assert first_ids == [1, 3, 5, 6]
+            os.remove(f"{ckpt}/commits/1")
+            if os.path.exists(f"{ckpt}/commits/.1.crc"):
+                os.remove(f"{ckpt}/commits/.1.crc")
+            ids, bloom = run()
+            assert bloom == first_bloom
+            assert set(ids) == set(first_ids)
+            assert ids == [1, 3, 5, 5, 6, 6]  # batch 1 re-appended
+            assert os.path.exists(f"{ckpt}/commits/1")
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
+
+#: Artifact subdirs each gate writes per batch, in commit order.
+_GATE_ARTIFACTS = {
+    "streaming_containment_dedup": ("sets", "docs", "dfreq", "index"),
+    "streaming_minhash_dedup": ("shingles", "docs", "keys"),
+}
+
+
+class TestArtifactGateCrashPoints:
+    """Crash-point matrix for the two artifact gates. Batch 1 fails
+    right after one of its writes lands — each state artifact, the
+    enumerating one (committed last) included, and the output append.
+    The stream then restarts from the same checkpoint and replays
+    batch 1. Its distinct survivor ids and every artifact's ``b=1``
+    rows must equal those of an uninterrupted run. The fault is
+    injected by patching ``DataFrameWriter.parquet`` and matched on
+    the target path, not on the call order, because the artifact
+    writes run concurrently."""
+
+    BATCHES = [
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+            (3, "pack my box with five dozen liquor jugs"),
+        ],
+        [
+            (4, "the quick brown fox jumps over the lazy dog"),
+            (5, "sphinx of black quartz judge my vow"),
+            (6, "sphinx of black quartz judge my vow"),
+            (7, "how vexingly quick daft zebras jump"),
+        ],
+    ]
+
+    @pytest.fixture(scope="class")
+    def uninterrupted(self):
+        """Per-gate result of the uninterrupted run, built once."""
+        return {}
+
+    def _run_batch(self, spark, gate, base, b):
+        """Add batch ``b``'s file (unless a crashed run added it) and
+        drain the stream; returns the stopped query."""
+        import os
+
+        from pyspark.sql.types import LongType
+
+        path = f"{base}/src/b{b}.json"
+        if not os.path.exists(path):
+            with open(path, "w") as f:
+                f.write(
+                    "\n".join(
+                        json.dumps({"doc_id": i, "text": t})
+                        for i, t in self.BATCHES[b]
+                    )
+                )
+        schema = StructType(
+            [StructField("doc_id", LongType()), StructField("text", StringType())]
+        )
+        stream = spark.readStream.format("json").schema(schema).load(
+            f"{base}/src"
+        )
+        kw = {"threshold": 0.9, "k": 1} if "containment" in gate else {}
+        q = getattr(W, gate)(
+            stream, f"{base}/out", f"{base}/hist", f"{base}/ckpt",
+            available_now=True, **kw,
+        )
+        try:
+            q.awaitTermination(120)
+        except StreamingQueryException:
+            pass  # the injected crash; callers check q.exception()
+        finally:
+            q.stop()
+        return q
+
+    def _observed(self, spark, gate, base):
+        def rows(path):
+            return sorted(
+                tuple(tuple(sorted(v)) if isinstance(v, list) else v for v in r)
+                for r in spark.read.parquet(path).collect()
+            )
+
+        ids = {r.doc_id for r in spark.read.parquet(f"{base}/out").collect()}
+        return ids, {
+            sub: rows(f"{base}/hist/{sub}/b=1") for sub in _GATE_ARTIFACTS[gate]
+        }
+
+    def _fresh_base(self):
+        import os
+
+        base = tempfile.mkdtemp(prefix="crash_")
+        os.makedirs(f"{base}/src")
+        return base
+
+    def _reference(self, spark, gate, uninterrupted):
+        if gate not in uninterrupted:
+            base = self._fresh_base()
+            try:
+                for b in (0, 1):
+                    assert self._run_batch(spark, gate, base, b).exception() is None
+                uninterrupted[gate] = self._observed(spark, gate, base)
+            finally:
+                shutil.rmtree(base, ignore_errors=True)
+        return uninterrupted[gate]
+
+    @pytest.mark.parametrize(
+        "gate,boundary",
+        [
+            (gate, boundary)
+            for gate, subs in _GATE_ARTIFACTS.items()
+            for boundary in subs + ("output",)
+        ],
+    )
+    def test_restart_after_crash_matches_uninterrupted_run(
+        self, spark, monkeypatch, uninterrupted, gate, boundary
+    ):
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        want = self._reference(spark, gate, uninterrupted)
+        # both batches contribute survivors, and batch 1 drops doc 4
+        # against batch 0's history
+        assert want[0] == {1, 3, 5, 7}
+        base = self._fresh_base()
+        target = (
+            f"{base}/out" if boundary == "output" else f"{base}/hist/{boundary}/b=1"
+        )
+        write = DataFrameWriter.parquet
+
+        def crashing(self_, path, *args, **kwargs):
+            write(self_, path, *args, **kwargs)
+            if str(path).rstrip("/") == target:
+                raise RuntimeError(f"injected crash after writing {path}")
+
+        try:
+            assert self._run_batch(spark, gate, base, 0).exception() is None
+            monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+            crashed = self._run_batch(spark, gate, base, 1)
+            monkeypatch.undo()
+            assert "injected crash" in str(crashed.exception())
+            # restart: the checkpoint holds batch 1's offsets but no
+            # commit, so the stream replays batch 1
+            assert self._run_batch(spark, gate, base, 1).exception() is None
+            assert self._observed(spark, gate, base) == want
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
 
 class TestStreamingContainmentDedup:
     def test_truncations_blocked_within_and_across_batches(self, spark):
@@ -2087,14 +2345,15 @@ class TestStreamingContainmentDedup:
             # batch 0's full history — not the empty set the old
             # fold-everything compaction left it
             from pd_utils_spark.streaming.stateful import (
-                _containment_state_frames,
-                _versioned_state_pieces,
+                _CONTAINMENT,
+                _artifact_state,
+                _state_pieces,
             )
 
-            assert _versioned_state_pieces(spark, hist, "index", 1) == [
+            assert _state_pieces(spark, hist, "index", 1) == [
                 "c=0"
             ]
-            replay_state = _containment_state_frames(spark, hist, below=1)
+            replay_state = _artifact_state(spark, hist, _CONTAINMENT, below=1)
             assert replay_state is not None
             assert {
                 r["__hid__"] for r in replay_state[1].collect()
@@ -2132,8 +2391,9 @@ class TestStreamingContainmentDedup:
             dedup_containment_against_index,
         )
         from pd_utils_spark.streaming.stateful import (
-            _containment_state_frames,
-            _versioned_state_pieces,
+            _CONTAINMENT,
+            _artifact_state,
+            _state_pieces,
             compact_containment_state,
         )
         from pd_utils_spark.utils import release_registered
@@ -2160,7 +2420,7 @@ class TestStreamingContainmentDedup:
         import os
 
         assert os.path.exists(f"{hist}/index/b=0/_SUCCESS")
-        assert _versioned_state_pieces(spark, hist, "index", 2) == [
+        assert _state_pieces(spark, hist, "index", 2) == [
             "c=0", "b=1",
         ]
         batch = spark.createDataFrame(
@@ -2169,7 +2429,9 @@ class TestStreamingContainmentDedup:
              (12, "wholly fresh third batch words")],   # novel
             ["doc_id", "text"],
         )
-        index, sets, dfreq = _containment_state_frames(spark, hist, below=2)
+        index, sets, dfreq = _artifact_state(
+            spark, hist, _CONTAINMENT, below=2
+        )
         want = sorted(
             tuple(r)
             for r in dedup_containment_against_index(
@@ -2209,7 +2471,7 @@ class TestCompactionReappliesFloodCap:
     def test_minhash_compaction_recaps_folded_keys(self, spark, tmp_path):
         from pd_utils_spark.extensions.dedup import minhash_history_frames
         from pd_utils_spark.streaming.stateful import (
-            _minhash_state_frames,
+            _artifact_state,
             compact_minhash_state,
         )
         from pd_utils_spark.utils import release_registered
@@ -2330,19 +2592,20 @@ class TestSpreadBatchSizeAware:
         df = spark.read.parquet(p)
         n_in = df.rdd.getNumPartitions()
         out = _spread_batch(df)
-        # a KB-sized batch is far under the 4 MiB/task grain: no spread
+        # a KB-sized batch is far under the 64 KiB/task grain: no spread
         assert out.rdd.getNumPartitions() == n_in
 
     def test_large_estimate_spreads_to_parallelism(
         self, spark, tmp_path, monkeypatch
     ):
+        from pd_utils_spark.streaming import stateful
         from pd_utils_spark.streaming.stateful import _spread_batch
 
         p = str(tmp_path / "grain")
         spark.range(100).coalesce(1).write.parquet(p)
         df = spark.read.parquet(p)
         # 1-byte grain: every batch's estimate exceeds it -> full fan
-        monkeypatch.setenv("SPARK_GRAFT_SPREAD_TARGET_BYTES", "1")
+        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", 1)
         out = _spread_batch(df)
         assert (
             out.rdd.getNumPartitions()
@@ -2350,6 +2613,7 @@ class TestSpreadBatchSizeAware:
         )
 
     def test_grain_scales_partition_count(self, spark, tmp_path, monkeypatch):
+        from pd_utils_spark.streaming import stateful
         from pd_utils_spark.streaming.stateful import _spread_batch
 
         p = str(tmp_path / "mid")
@@ -2362,9 +2626,7 @@ class TestSpreadBatchSizeAware:
         )
         assert est > 0
         # grain = half the estimate -> exactly ceil(est/grain) = 2 parts
-        monkeypatch.setenv(
-            "SPARK_GRAFT_SPREAD_TARGET_BYTES", str((est + 1) // 2)
-        )
+        monkeypatch.setattr(stateful, "_SPREAD_TARGET_BYTES", (est + 1) // 2)
         out = _spread_batch(df)
         assert out.rdd.getNumPartitions() == 2
 
